@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bakery_big_data_spark.sources.tables import read_parquet
+
 _LCG_M = 2147483647
 _SPLIT_A = 2654435761
 _SPLIT_C = 97531
@@ -189,7 +191,7 @@ def run_curation_pipeline(
     from bakery_big_data_spark.plans.base import t
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    committed = spark.read.parquet(f"{base_path}/curation_manifest")
+    committed = read_parquet(spark, f"{base_path}/curation_manifest")
     training = (
         committed.filter(F.col("is_training"))
         .select("doc_id", "split", "n_chars")
@@ -205,7 +207,7 @@ def run_curation_pipeline(
     # splits, and shard count scales with the cluster)
     from pyspark.sql import Window
 
-    corpus = spark.read.parquet(f"{base_path}/training_corpus")
+    corpus = read_parquet(spark, f"{base_path}/training_corpus")
     toks = corpus.filter(F.col("split") == "train").select(
         "doc_id",
         (F.col("doc_id") % 8).alias("shard"),
@@ -228,9 +230,9 @@ def run_curation_pipeline(
     )
     packed.write.mode("overwrite").parquet(f"{base_path}/packed_train")
     return {
-        "curation_manifest": spark.read.parquet(f"{base_path}/curation_manifest"),
-        "training_corpus": spark.read.parquet(f"{base_path}/training_corpus"),
-        "packed_train": spark.read.parquet(f"{base_path}/packed_train"),
+        "curation_manifest": read_parquet(spark, f"{base_path}/curation_manifest"),
+        "training_corpus": read_parquet(spark, f"{base_path}/training_corpus"),
+        "packed_train": read_parquet(spark, f"{base_path}/packed_train"),
     }
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from bakery_big_data_spark.quality import QualityRule, apply_quality_rules, quality_gate
 from bakery_big_data_spark.sources.sinks import overwrite_partitions
-from bakery_big_data_spark.sources.tables import load_table
+from bakery_big_data_spark.sources.tables import load_table, read_parquet
 
 
 def event_rules() -> list[QualityRule]:
@@ -497,11 +497,11 @@ def run_medallion(
         "event_date", F.to_date("ts")
     )
     overwrite_partitions(bronze, f"{base_path}/bronze_events", ["event_date"])
-    bronze_r = spark.read.parquet(f"{base_path}/bronze_events")
+    bronze_r = read_parquet(spark, f"{base_path}/bronze_events")
 
     silver = silver_events(bronze_r.drop("event_date"))
     overwrite_partitions(silver, f"{base_path}/silver_events", ["event_date"])
-    silver_r = spark.read.parquet(f"{base_path}/silver_events")
+    silver_r = read_parquet(spark, f"{base_path}/silver_events")
 
     fb_silver = silver_feedback(bronze_feedback(spark, sf_dir))
     overwrite_partitions(
@@ -509,7 +509,7 @@ def run_medallion(
         f"{base_path}/silver_feedback",
         ["event_date"],
     )
-    fb_silver_r = spark.read.parquet(f"{base_path}/silver_feedback").drop(
+    fb_silver_r = read_parquet(spark, f"{base_path}/silver_feedback").drop(
         "event_date"
     )
 
@@ -522,14 +522,14 @@ def run_medallion(
     fact = gold_fact_daily(silver_r)
     overwrite_partitions(fact, f"{base_path}/gold_fact_daily", ["event_date"])
 
-    cal_r = spark.read.parquet(f"{base_path}/gold_dim_calendar")
-    fact_r = spark.read.parquet(f"{base_path}/gold_fact_daily")
+    cal_r = read_parquet(spark, f"{base_path}/gold_dim_calendar")
+    fact_r = read_parquet(spark, f"{base_path}/gold_fact_daily")
 
     fb_fact = gold_fact_feedback_daily(fb_silver_r)
     overwrite_partitions(
         fb_fact, f"{base_path}/gold_fact_feedback_daily", ["event_date"]
     )
-    fb_fact_r = spark.read.parquet(f"{base_path}/gold_fact_feedback_daily")
+    fb_fact_r = read_parquet(spark, f"{base_path}/gold_fact_feedback_daily")
 
     type_stats = gold_dim_type_stats(silver_r)
     type_stats.write.mode("overwrite").parquet(f"{base_path}/gold_dim_type_stats")
@@ -544,9 +544,9 @@ def run_medallion(
         fact_r,
         cal_r,
         fb_fact_r,
-        spark.read.parquet(f"{base_path}/gold_seasonality"),
-        spark.read.parquet(f"{base_path}/gold_dim_type_stats"),
-        spark.read.parquet(f"{base_path}/gold_dim_promotions"),
+        read_parquet(spark, f"{base_path}/gold_seasonality"),
+        read_parquet(spark, f"{base_path}/gold_dim_type_stats"),
+        read_parquet(spark, f"{base_path}/gold_dim_promotions"),
     )
     overwrite_partitions(wide, f"{base_path}/ml_features_wide", ["event_date"])
 
@@ -555,7 +555,7 @@ def run_medallion(
         user_fact, f"{base_path}/gold_fact_user_daily", ["event_date"]
     )
     user_feats = ml_user_features(
-        spark.read.parquet(f"{base_path}/gold_fact_user_daily")
+        read_parquet(spark, f"{base_path}/gold_fact_user_daily")
     )
     overwrite_partitions(
         user_feats, f"{base_path}/ml_user_features", ["event_date"]
@@ -566,17 +566,17 @@ def run_medallion(
         "silver": silver_r,
         "silver_feedback": fb_silver_r,
         "dim_calendar": cal_r,
-        "dim_user": spark.read.parquet(f"{base_path}/gold_dim_user"),
-        "dim_user_scd2": spark.read.parquet(f"{base_path}/gold_dim_user_scd2"),
-        "dim_type_stats": spark.read.parquet(f"{base_path}/gold_dim_type_stats"),
-        "dim_promotions": spark.read.parquet(f"{base_path}/gold_dim_promotions"),
-        "seasonality": spark.read.parquet(f"{base_path}/gold_seasonality"),
+        "dim_user": read_parquet(spark, f"{base_path}/gold_dim_user"),
+        "dim_user_scd2": read_parquet(spark, f"{base_path}/gold_dim_user_scd2"),
+        "dim_type_stats": read_parquet(spark, f"{base_path}/gold_dim_type_stats"),
+        "dim_promotions": read_parquet(spark, f"{base_path}/gold_dim_promotions"),
+        "seasonality": read_parquet(spark, f"{base_path}/gold_seasonality"),
         "fact_daily": fact_r,
         "fact_feedback_daily": fb_fact_r,
-        "ml_features": spark.read.parquet(f"{base_path}/ml_features_daily"),
-        "ml_features_wide": spark.read.parquet(f"{base_path}/ml_features_wide"),
-        "fact_user_daily": spark.read.parquet(f"{base_path}/gold_fact_user_daily"),
-        "ml_user_features": spark.read.parquet(f"{base_path}/ml_user_features"),
+        "ml_features": read_parquet(spark, f"{base_path}/ml_features_daily"),
+        "ml_features_wide": read_parquet(spark, f"{base_path}/ml_features_wide"),
+        "fact_user_daily": read_parquet(spark, f"{base_path}/gold_fact_user_daily"),
+        "ml_user_features": read_parquet(spark, f"{base_path}/ml_user_features"),
     }
 
 
@@ -716,7 +716,7 @@ def apply_medallion_arrival(
     overwrite_partitions(
         silver_d, f"{base_path}/silver_events", ["event_date"]
     )
-    silver_d = spark.read.parquet(f"{base_path}/silver_events").filter(
+    silver_d = read_parquet(spark, f"{base_path}/silver_events").filter(
         day_filter(F.col("event_date"))
     )
     fb_d = silver_feedback(bronze_feedback(spark, sf_dir)).filter(
@@ -850,18 +850,18 @@ def derive_medallion_dims(
     )
 
     return {
-        "silver": spark.read.parquet(f"{base_path}/silver_events"),
-        "silver_feedback": spark.read.parquet(f"{base_path}/silver_feedback"),
-        "fact_daily": spark.read.parquet(f"{base_path}/gold_fact_daily"),
-        "fact_feedback_daily": spark.read.parquet(
-            f"{base_path}/gold_fact_feedback_daily"
+        "silver": read_parquet(spark, f"{base_path}/silver_events"),
+        "silver_feedback": read_parquet(spark, f"{base_path}/silver_feedback"),
+        "fact_daily": read_parquet(spark, f"{base_path}/gold_fact_daily"),
+        "fact_feedback_daily": read_parquet(
+            spark, f"{base_path}/gold_fact_feedback_daily"
         ),
-        "fact_user_daily": spark.read.parquet(
-            f"{base_path}/gold_fact_user_daily"
+        "fact_user_daily": read_parquet(
+            spark, f"{base_path}/gold_fact_user_daily"
         ),
-        "dim_user": spark.read.parquet(f"{base_path}/gold_dim_user"),
-        "dim_type_stats": spark.read.parquet(
-            f"{base_path}/gold_dim_type_stats"
+        "dim_user": read_parquet(spark, f"{base_path}/gold_dim_user"),
+        "dim_type_stats": read_parquet(
+            spark, f"{base_path}/gold_dim_type_stats"
         ),
         "dim_user_scd2": read_snapshot(spark, scd2_path),
     }

@@ -1347,6 +1347,23 @@ def timeseries_seasonal_decompose(
     )
 
 
+_DAY_US = 86_400_000_000
+
+
+def _sweep_bucket_us() -> int:
+    """The sweep-line bucket width of ``sessions_peak_concurrency``
+    (``SPARK_GRAFT_SWEEP_BUCKET_US``, default 1 h).  A width that does not
+    divide the day would let buckets straddle day boundaries and misassign
+    peaks; one over a day makes the per-day bucket count 0."""
+    bucket_us = int(os.environ.get("SPARK_GRAFT_SWEEP_BUCKET_US", str(3_600_000_000)))
+    if not (0 < bucket_us <= _DAY_US and _DAY_US % bucket_us == 0):
+        raise ValueError(
+            f"SPARK_GRAFT_SWEEP_BUCKET_US={bucket_us} must be in (0, {_DAY_US}] "
+            "and divide the day"
+        )
+    return bucket_us
+
+
 @register(
     "sessions_peak_concurrency",
     """
@@ -1465,10 +1482,8 @@ def sessions_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (1.25 s -> 6.44 s at sf0.1), while the bucket scan adds only one
     # hash exchange.  Bucket width is the skew knob at real scale
     # (default 1 h; must divide the 86,400 s day).
-    bucket_us = int(
-        os.environ.get("SPARK_GRAFT_SWEEP_BUCKET_US", str(3_600_000_000))
-    )
-    per_day = 86_400_000_000 // bucket_us
+    bucket_us = _sweep_bucket_us()
+    per_day = _DAY_US // bucket_us
     w1 = (
         Window.partitionBy("_bkt")
         .orderBy("us", "delta")

@@ -35,6 +35,7 @@ from bakery_big_data_spark.operators.dedup import (
     word_shingles,
 )
 from bakery_big_data_spark.plans.base import register, spread, t
+from bakery_big_data_spark.sources.tables import data_bytes
 
 # Shared oracle: exact word-trigram Jaccard pairs at threshold 0.5 computed
 # with plain set SQL (shared-shingle candidates, never all-pairs).
@@ -216,13 +217,10 @@ _INTER_PERSIST_MAX_BYTES = int(
 
 
 def _inter_persist_ok(sf_dir: str) -> bool:
-    try:
-        return (
-            os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-            <= _INTER_PERSIST_MAX_BYTES
-        )
-    except OSError:
-        return True  # unknown layout — keep the bench-SF-proven default
+    """Data bytes of documents.parquet, a single file or a directory of
+    part files, within the persist gate (a missing path has 0 bytes)."""
+    path = os.path.join(sf_dir, "documents.parquet")
+    return data_bytes(path) <= _INTER_PERSIST_MAX_BYTES
 
 
 def _inter_sized(spark: SparkSession, sf_dir: str) -> DataFrame:

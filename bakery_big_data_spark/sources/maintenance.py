@@ -30,15 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _dir_data_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            total += os.path.getsize(os.path.join(root, f))
-    return total
+from bakery_big_data_spark.sources.tables import data_bytes
 
 
 def compact_parquet(
@@ -55,7 +47,7 @@ def compact_parquet(
     rewrite (repartitionByRange + sortWithinPartitions) that tightens
     row-group statistics on the given columns.
     """
-    n_out = max(1, math.ceil(_dir_data_bytes(src) / target_bytes))
+    n_out = max(1, math.ceil(data_bytes(src) / target_bytes))
     df: DataFrame = spark.read.parquet(src)
     if order_by:
         out = df.repartitionByRange(

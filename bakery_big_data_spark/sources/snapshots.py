@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bakery_big_data_spark.sources.tables import read_parquet
+
 _MANIFEST = "_snapshot_manifest.json"
 
 
@@ -92,7 +94,7 @@ def read_snapshot(
     v = m["current"] if version is None else version
     if v not in m["versions"]:
         raise ValueError(f"version {v} not in {m['versions']} at {table_path}")
-    return spark.read.parquet(os.path.join(table_path, f"v={v}"))
+    return read_parquet(spark, os.path.join(table_path, f"v={v}"))
 
 
 def snapshot_diff(

@@ -3,6 +3,7 @@ value equality; these pin the semantic properties the oracles can't state)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bakery_big_data_spark.plans import REGISTRY
@@ -63,3 +64,41 @@ def test_anomaly_zscore_flags_match_threshold(spark, sf_dir):
     assert rows
     for r in rows:
         assert r.is_anomaly == (abs(r.zscore) > 2.0)
+
+
+def test_sweep_bucket_width_is_validated(spark, sf_dir, monkeypatch):
+    from tests.oracle import compare, duck_connect
+
+    q = REGISTRY["sessions_peak_concurrency"]
+    for bad in ("7000000", str(2 * 86_400_000_000), "0"):
+        monkeypatch.setenv("SPARK_GRAFT_SWEEP_BUCKET_US", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_SWEEP_BUCKET_US"):
+            q.build(spark, sf_dir)
+    monkeypatch.delenv("SPARK_GRAFT_SWEEP_BUCKET_US")
+    con = duck_connect(sf_dir)
+    try:
+        compare(q.build(spark, sf_dir), con, q.oracle)
+    finally:
+        con.close()
+
+
+def test_scalable_ntile_rejects_a_wrong_row_count(spark, sf_dir):
+    from pyspark.errors import PySparkException
+
+    from bakery_big_data_spark.operators.keys import scalable_ntile
+    from tests.oracle import compare, duck_connect
+
+    df = spark.range(20).withColumnRenamed("id", "k")
+    wrong = spark.range(1).select(F.lit(10).cast("bigint").alias("_nt_n"))
+    with pytest.raises(PySparkException, match="n_rows is not the row count"):
+        scalable_ntile(df, ["k"], 4, n_rows=wrong).collect()
+    right = spark.range(1).select(F.lit(20).cast("bigint").alias("_nt_n"))
+    tiles = scalable_ntile(df, ["k"], 4, n_rows=right).orderBy("k").collect()
+    assert [r.ntile for r in tiles] == [1] * 5 + [2] * 5 + [3] * 5 + [4] * 5
+
+    q = REGISTRY["rfm_segmentation"]
+    con = duck_connect(sf_dir)
+    try:
+        compare(q.build(spark, sf_dir), con, q.oracle)
+    finally:
+        con.close()

@@ -286,3 +286,19 @@ def test_span_intervals_cover_equals_cross_doc_union(spark, sf_dir):
     }
     assert iv == cov
     assert len(iv) > 0
+
+
+def test_inter_persist_gate_measures_directory_layout(tmp_path, monkeypatch):
+    """The pair-frame persist gate sums the part files of a directory-layout
+    documents.parquet (the directory entry's own size is a few KB)."""
+    import bakery_big_data_spark.plans.dedup as plans_dedup
+
+    docs = tmp_path / "documents.parquet"
+    docs.mkdir()
+    for i in range(3):
+        (docs / f"part-{i:05d}.parquet").write_bytes(b"x" * 1000)
+    (docs / "_SUCCESS").write_bytes(b"")
+    monkeypatch.setattr(plans_dedup, "_INTER_PERSIST_MAX_BYTES", 2500)
+    assert not plans_dedup._inter_persist_ok(str(tmp_path))
+    monkeypatch.setattr(plans_dedup, "_INTER_PERSIST_MAX_BYTES", 3000)
+    assert plans_dedup._inter_persist_ok(str(tmp_path))
