@@ -7,8 +7,10 @@ import os
 from pyspark.sql import functions as F
 
 from bakery_big_data_spark.plans import REGISTRY
+from bakery_big_data_spark.plans.aggregates import hll_distinct_within_bound
 from bakery_big_data_spark.sources.sinks import compact_parquet_dir
 from bakery_big_data_spark.sources.tables import load_table
+from tests.oracle import compare, duck_connect
 
 
 def test_hll_sketch_error_bound(spark, sf01_dir):
@@ -23,6 +25,20 @@ def test_hll_sketch_error_bound(spark, sf01_dir):
     )
     assert row["exact_distinct_users"] > 0
     assert row["within_bound"] is True
+
+
+def test_hll_distinct_bound_holds_in_dense_mode(spark, sf01_dir):
+    """100k distinct ids push the lgConfigK=14 sketch into its dense HLL
+    mode (the 150 users of the sf0.01 events stay in its sparse coupon
+    modes); the estimate must still land within 5% of exact, and the
+    catalog row must match its oracle."""
+    ids = spark.range(100_000).withColumnRenamed("id", "user_id")
+    row = hll_distinct_within_bound(ids).collect()[0]
+    assert row["exact_users"] == 100_000
+    assert row["within_bound"] is True
+
+    q = REGISTRY["approx_count_distinct_scale"]
+    compare(q.build(spark, sf01_dir), duck_connect(sf01_dir), q.oracle)
 
 
 def test_hll_daily_sketches_merge_like_raw(spark, sf01_dir):

@@ -156,7 +156,7 @@ NESTED_LOOP_ALLOWED = {
     "similarity_ivf_upsert_served",
     # deliberate 1-row × 1-row broadcast cross: the HLL estimate joined
     # onto the exact-count row — split from one mixed aggregate so the
-    # Expand-planned distinct no longer allocates an rsd=0.01 HLL buffer
+    # Expand-planned distinct no longer allocates an HLL sketch buffer
     # per (gid, user_id) partial group
     "approx_count_distinct_scale",
 }

@@ -142,6 +142,15 @@ def test_idle_session_flush_matches_batch_sessionization(
             )
             + "\n"
         )
+    # The file source delivers files oldest first by millisecond mtime, and
+    # files written within one tick tie; a sentinel delivered before
+    # part-3 would push the watermark past part-3's real events.  Stamp
+    # strictly increasing mtimes, in the order the files must arrive.
+    for i, name in enumerate(
+        ["part-0.json", "part-1.json", "part-2.json", "part-3.json",
+         "part-4-sentinel.json"]
+    ):
+        os.utime(f"{src}/{name}", (1_600_000_000 + i, 1_600_000_000 + i))
 
     stream = idle_session_flush(
         read_json_stream(spark, src, max_files_per_trigger=max_files),
