@@ -155,23 +155,6 @@ def scd2_apply(
         .select(business_key, *tracked)
     )
 
-    # Close open versions of changed keys (S11 UPDATE, no driver IN-list).
-    chg_keys = changed.select(business_key).withColumn("_chg", F.lit(True))
-    closing = F.coalesce(F.col("_chg"), F.lit(False)) & F.col(flag_col)
-    kept = (
-        current.join(chg_keys, business_key, "left")
-        .withColumn(
-            end_col,
-            F.when(closing, F.lit(effective_date).cast("date")).otherwise(
-                F.col(end_col)
-            ),
-        )
-        .withColumn(
-            flag_col, F.when(closing, F.lit(False)).otherwise(F.col(flag_col))
-        )
-        .drop("_chg")
-    )
-
     if key_base is None:
         # Lazy scalar: 1-row MAX(key) aggregate broadcast-crossed onto the
         # insert rows (Catalyst plans a broadcast of a single row) — the
@@ -195,5 +178,24 @@ def scd2_apply(
         F.lit(effective_date).cast("date").alias(start_col),
         F.lit(None).cast("date").alias(end_col),
         F.lit(True).alias(flag_col),
+    )
+
+    # Close open versions of changed keys (S11 UPDATE, no driver IN-list).
+    # The keys come from the inserts (one row per changed key), which read
+    # add_surrogate_key's checkpoint: the change set is detected once.
+    chg_keys = inserts.select(business_key).withColumn("_chg", F.lit(True))
+    closing = F.coalesce(F.col("_chg"), F.lit(False)) & F.col(flag_col)
+    kept = (
+        current.join(chg_keys, business_key, "left")
+        .withColumn(
+            end_col,
+            F.when(closing, F.lit(effective_date).cast("date")).otherwise(
+                F.col(end_col)
+            ),
+        )
+        .withColumn(
+            flag_col, F.when(closing, F.lit(False)).otherwise(F.col(flag_col))
+        )
+        .drop("_chg")
     )
     return kept.unionByName(inserts.select(*current.columns))

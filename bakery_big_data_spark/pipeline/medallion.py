@@ -36,7 +36,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bakery_big_data_spark.quality import QualityRule, apply_quality_rules, quality_gate
-from bakery_big_data_spark.sources.sinks import overwrite_partitions
+from bakery_big_data_spark.sources.sinks import (
+    commit_concurrently,
+    overwrite_partitions,
+)
 from bakery_big_data_spark.sources.tables import load_table, read_parquet
 
 
@@ -600,8 +603,9 @@ def run_medallion_incremental(
       new chunk's rows only; dynamic partition overwrite commits just the
       new day partitions.
     - **facts Δ** — every fact row depends only on its own day, so the
-      chunk's facts are computed from the Δ silver alone and land as
-      day-partition overwrites (re-running a day stays idempotent).
+      chunk's facts are computed from the lazy Δ silver alone (never from
+      the just-written silver table) and land as day-partition overwrites
+      (re-running a day stays idempotent).
     - **dim state via Δ-aggregation** — one auxiliary state table at
       ``(event_type, user_id)`` grain (counts, decimal value sums, date
       bounds) is merged per chunk: ``old ∪ Δ → re-aggregate``.  Sums, counts,
@@ -620,6 +624,11 @@ def run_medallion_incremental(
       version history than the one-shot run, so the cross-run invariant is
       the OPEN snapshot: every user's ``is_current`` (band, first_seen)
       must equal the full run's staged profile.
+
+    Each arrival commits in two waves (see :func:`apply_medallion_arrival`):
+    the silver, fact and state commits at once — no wave-1 commit reads
+    another's output — then the SCD2 commit that reads the merged state;
+    :func:`derive_medallion_dims` commits its two dims as one more wave.
 
     The per-chunk driver work is one bounded ``collect`` of distinct DATES
     (calendar metadata, O(days), never data rows).  Parity with the
@@ -688,12 +697,24 @@ def apply_medallion_arrival(
     associative state merge are order-independent — see the runner
     docstring); ``arrival_id`` must be the monotone arrival-sequence
     position.  ``chunk_dates`` lists the arrival's exact days when they
-    are NOT the contiguous range [lo, hi] (the interleaved plan) — the
-    internal re-reads must filter to the arrival's own days, or
-    previously-landed days inside [lo, hi] would be double-merged into
-    the state.  Each stateful table carries its own applied-id guard
-    inside its snapshot commit, so replaying an arrival (crash recovery,
-    checkpoint re-delivery) is exactly-once.
+    are NOT the contiguous range [lo, hi] (the interleaved plan); the
+    silver deltas are filtered to the arrival's own days, so rows of
+    previously-landed days inside [lo, hi] can never be merged into the
+    state twice.
+
+    The arrival commits in two waves (:func:`commit_concurrently`):
+
+    1. ``silver_events``, ``silver_feedback``, the three day-partitioned
+       facts and the ``type_user_state`` merge, all at once.  No wave-1
+       commit reads another's output: the facts and the state delta are
+       built from the lazy silver delta, never from the just-written
+       ``silver_events``;
+    2. the SCD2 commit, which reads the state wave 1 committed.
+
+    Each stateful table carries its own applied-id guard inside its
+    snapshot commit, so replaying an arrival (crash recovery, checkpoint
+    re-delivery) is exactly-once; a wave returns only after all its
+    commits finished, so a failed arrival leaves no write running.
     """
     from bakery_big_data_spark.operators.mutation import scd2_apply
     from bakery_big_data_spark.sources.snapshots import (
@@ -712,50 +733,33 @@ def apply_medallion_arrival(
         if chunk_dates is not None
         else (lambda c: c.between(lo, hi))
     )
-    silver_d = silver_events(bronze_d)
-    overwrite_partitions(
-        silver_d, f"{base_path}/silver_events", ["event_date"]
-    )
-    silver_d = read_parquet(spark, f"{base_path}/silver_events").filter(
-        day_filter(F.col("event_date"))
-    )
+    silver_d = silver_events(bronze_d).filter(day_filter(F.col("event_date")))
     fb_d = silver_feedback(bronze_feedback(spark, sf_dir)).filter(
         day_filter(F.col("feedback_date"))
     )
-    overwrite_partitions(
-        fb_d.withColumn("event_date", F.col("feedback_date")),
-        f"{base_path}/silver_feedback",
-        ["event_date"],
-    )
 
-    overwrite_partitions(
-        gold_fact_daily(silver_d),
-        f"{base_path}/gold_fact_daily",
-        ["event_date"],
-    )
-    overwrite_partitions(
-        gold_fact_feedback_daily(fb_d),
-        f"{base_path}/gold_fact_feedback_daily",
-        ["event_date"],
-    )
-    overwrite_partitions(
-        gold_fact_user_daily(silver_d),
-        f"{base_path}/gold_fact_user_daily",
-        ["event_date"],
-    )
+    def days_of(table: str, build):
+        # the frame is built inside the commit's own thread
+        return lambda: overwrite_partitions(
+            build(), f"{base_path}/{table}", ["event_date"]
+        )
 
-    # Exactly-once state maintenance under retries: the applied chunk
-    # id rides INSIDE each snapshot commit (same transactional pattern
-    # as the streaming versioned-rollup sink), so re-running a chunk
-    # after a crash never merges its delta twice.  The partition
-    # overwrites above are naturally idempotent; each stateful table
-    # carries its OWN guard, so a crash between the state commit and
-    # the SCD2 commit replays only the missing one.
-    applied = last_commit_meta(state_path)
-    if applied is None or applied.get("chunk", -1) < ci:
+    def commit_state() -> None:
+        # Exactly-once state maintenance under retries: the applied chunk
+        # id rides INSIDE each snapshot commit (same transactional pattern
+        # as the streaming versioned-rollup sink), so re-running a chunk
+        # after a crash never merges its delta twice.  The partition
+        # overwrites are naturally idempotent; each stateful table
+        # carries its OWN guard, so a crash between the state commit and
+        # the SCD2 commit replays only the missing one.
+        applied = last_commit_meta(state_path)
+        if applied is not None and applied.get("chunk", -1) >= ci:
+            return
         delta_state = silver_d.groupBy("event_type", "user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("value_sum"),
+            F.sum(F.col("value").cast("decimal(30,6)"))
+            .cast("decimal(38,6)")
+            .alias("value_sum"),
             F.min("event_date").alias("min_date"),
             F.max("event_date").alias("max_date"),
         )
@@ -764,12 +768,7 @@ def apply_medallion_arrival(
                 "value_sum", F.col("value_sum").cast("decimal(38,6)")
             )
             merged = (
-                prev.unionByName(
-                    delta_state.withColumn(
-                        "value_sum",
-                        F.col("value_sum").cast("decimal(38,6)"),
-                    )
-                )
+                prev.unionByName(delta_state)
                 .groupBy("event_type", "user_id")
                 .agg(
                     F.sum("n_events").alias("n_events"),
@@ -781,10 +780,25 @@ def apply_medallion_arrival(
                 )
             )
         else:
-            merged = delta_state.withColumn(
-                "value_sum", F.col("value_sum").cast("decimal(38,6)")
-            )
+            merged = delta_state
         write_snapshot(merged, state_path, meta={"chunk": ci})
+
+    commit_concurrently(
+        spark,
+        [
+            days_of("silver_events", lambda: silver_d),
+            days_of(
+                "silver_feedback",
+                lambda: fb_d.withColumn("event_date", F.col("feedback_date")),
+            ),
+            days_of("gold_fact_daily", lambda: gold_fact_daily(silver_d)),
+            days_of(
+                "gold_fact_feedback_daily", lambda: gold_fact_feedback_daily(fb_d)
+            ),
+            days_of("gold_fact_user_daily", lambda: gold_fact_user_daily(silver_d)),
+            commit_state,
+        ],
+    )
 
     # SCD2: staged profiles come from merged state (full-history band),
     # restricted to the chunk's touched users — changed keys only.
@@ -825,7 +839,8 @@ def derive_medallion_dims(
     spark: SparkSession, base_path: str
 ) -> dict[str, DataFrame]:
     """Derive the state-backed dims and return the maintained-table map —
-    the shared tail of both incremental runners."""
+    the shared tail of both incremental runners.  The two dims read only
+    the committed state, so they commit as one wave."""
     from bakery_big_data_spark.sources.snapshots import read_snapshot
 
     state_path = f"{base_path}/type_user_state"
@@ -838,15 +853,23 @@ def derive_medallion_dims(
         F.max("max_date").alias("last_seen_date"),
         F.count(F.lit(1)).alias("n_event_types"),
     )
-    dim_user.write.mode("overwrite").parquet(f"{base_path}/gold_dim_user")
     type_stats = state.groupBy("event_type").agg(
         (F.sum("value_sum").cast("double") / F.sum("n_events")).alias(
             "avg_value_type"
         ),
         F.count(F.lit(1)).alias("n_users_type"),
     )
-    type_stats.write.mode("overwrite").parquet(
-        f"{base_path}/gold_dim_type_stats"
+    # both dims read only the committed state: one wave
+    commit_concurrently(
+        spark,
+        [
+            lambda: dim_user.write.mode("overwrite").parquet(
+                f"{base_path}/gold_dim_user"
+            ),
+            lambda: type_stats.write.mode("overwrite").parquet(
+                f"{base_path}/gold_dim_type_stats"
+            ),
+        ],
     )
 
     return {

@@ -15,6 +15,12 @@ contract is:
   the post-mutation state of *affected partitions only* (operators.mutation
   is pure) and overwrite just those directories — the lakehouse
   read-modify-overwrite pattern, touching none of the other partitions.
+  Dynamic mode is a write option (``partitionOverwriteMode=dynamic``) of
+  that one write, never a session conf, so a plain overwrite running at
+  the same time keeps its static semantics;
+- **concurrent commits** of independent tables: :func:`commit_concurrently`
+  runs one wave of commits that do not read each other's output, one
+  thread each, and returns only once all of them have finished.
 
 At 100 TB: date-partitioned tables keep every batch-ETL scan bounded by the
 processing window, and partition overwrite keeps mutation I/O proportional
@@ -23,7 +29,11 @@ to changed partitions, not table size.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def append_parquet(df: DataFrame, path: str) -> None:
@@ -45,14 +55,36 @@ def overwrite_partitions(
 ) -> None:
     """Dynamic partition overwrite: replace only the partitions present in
     ``df`` — the parquet-native commit for MERGE/UPDATE/SCD2 results
-    (reference's Iceberg row-level DML, bronze_to_silver.py:78-90)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (reference's Iceberg row-level DML, bronze_to_silver.py:78-90).  The
+    mode is this write's option; the session conf is left alone."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(path)
+
+
+def commit_concurrently(
+    spark: SparkSession, commits: list[Callable[[], object]]
+) -> None:
+    """Run a wave of independent commits at once, one thread each.
+
+    The reference runs DAG steps that do not depend on each other side by
+    side (``silver_to_gold >> [generate_reports, data_quality_summary]``,
+    ``bakery_batch_etl.py:161``); a wave is that fan-out inside one
+    Spark application.  No commit may read another's output.  Each thread inherits
+    the caller's Spark local properties and session tags (job group,
+    scheduler pool).  Returns once EVERY commit has finished, then
+    re-raises the first failure in list order — no write outlives a
+    failed wave.
+    """
+    with ThreadPoolExecutor(max_workers=len(commits)) as pool:
+        # one wrapper per commit: each copies the local properties, so the
+        # threads never share one mutable Properties object
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(commit))
+            for commit in commits
+        ]
+    for future in futures:
+        future.result()  # re-raises a failed commit's exception
 
 
 def create_database(spark: SparkSession, name: str, location: str) -> None:

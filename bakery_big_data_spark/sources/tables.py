@@ -32,6 +32,13 @@ Iceberg catalog.  Here a session-scoped catalog plays that role:
   the catalog never holds more than one entry per path.
 
 Paths that are not on the local filesystem are inferred on every call.
+
+Thread safety: :func:`read_parquet` may be called from several threads at
+once (the pipelines' concurrent commit waves do).  Entries are immutable,
+and the catalog changes only through single dict operations, which the
+GIL makes atomic, so no lock is needed: threads that miss the same path
+at the same time each infer it, and the last one's entry — for the same
+content — replaces the others, so a path still has exactly one entry.
 """
 
 from __future__ import annotations

@@ -4,6 +4,8 @@ dynamic partition overwrite, CSV ingest with casts, saveAsTable/DDL/CTAS."""
 from __future__ import annotations
 
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,6 +84,44 @@ def test_dynamic_partition_overwrite_touches_only_changed(spark, sf_dir, scratch
         .first()[0]
     )
     assert float(v_new) == pytest.approx(2 * float(v_orig))
+
+
+def test_overwrite_partitions_leaves_session_state_alone(spark, tmp_path):
+    """Dynamic mode is the write's own option: the session conf never
+    changes, so a plain partitioned overwrite running at the same time in
+    another thread keeps static semantics (drops the partitions it does
+    not write)."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+
+    def days(*ds, slow=False):
+        df = spark.createDataFrame([(d, d) for d in ds], "k int, d int")
+        if slow:  # keep the write running while the other one commits
+            df = df.withColumn(
+                "z", F.expr("reflect('java.lang.Thread', 'sleep', CAST(3000 AS BIGINT))")
+            )
+        return df
+
+    dynamic, static = str(tmp_path / "dynamic"), str(tmp_path / "static")
+    days(1, slow=True).write.partitionBy("d").parquet(dynamic)
+    days(1, 2).write.partitionBy("d").parquet(static)
+    started = threading.Event()
+
+    def dynamic_write():
+        started.set()
+        overwrite_partitions(days(2, slow=True), dynamic, ["d"])
+
+    t = threading.Thread(target=dynamic_write)
+    t.start()
+    assert started.wait(timeout=60)
+    time.sleep(1.0)  # the dynamic write is inside its 3 s task now
+    days(1).write.mode("overwrite").partitionBy("d").parquet(static)
+    t.join(timeout=300)
+    assert not t.is_alive()
+
+    assert spark.conf.get(conf) == before
+    assert sorted(r.d for r in spark.read.parquet(static).collect()) == [1]
+    assert sorted(r.d for r in spark.read.parquet(dynamic).collect()) == [1, 2]
 
 
 def test_append_accumulates(spark, sf_dir, scratch):

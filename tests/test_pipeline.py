@@ -619,6 +619,95 @@ def test_streaming_dedup_gate_arrival_fuzz(spark, sf_dir, seed):
     assert fuzzed == baseline
 
 
+@pytest.mark.parametrize("crash_table", ["gold_fact_user_daily", "type_user_state"])
+def test_incremental_medallion_survives_crash_inside_a_wave(
+    spark, sf_dir, tmp_path, monkeypatch, crash_table
+):
+    """One wave-1 commit of the second arrival fails (a partition commit,
+    or the state commit).  The arrival must raise only after every sibling
+    commit of its wave finished, leave no staging directory and skip the
+    SCD2 wave; a replay must equal an uncrashed run."""
+    import time
+    from collections import Counter
+
+    from bakery_big_data_spark.pipeline import medallion
+    from bakery_big_data_spark.sources import snapshots as snapmod
+
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+
+    def outcome(layers, base):
+        return (
+            {tuple(r) for r in layers["fact_daily"].collect()},
+            {tuple(r) for r in layers["fact_feedback_daily"].collect()},
+            {tuple(r) for r in layers["fact_user_daily"].collect()},
+            {tuple(r) for r in layers["dim_user"].collect()},
+            {
+                (r.user_id, r.value_band, r.first_seen_date)
+                for r in layers["dim_user_scd2"].filter("is_current").collect()
+            },
+            snapmod._load_manifest(f"{base}/type_user_state")["versions"],
+        )
+
+    want = outcome(
+        medallion.run_medallion_incremental(spark, sf_dir, clean, n_chunks=3), clean
+    )
+
+    calls, finished = Counter(), {}
+    real_overwrite, real_snapshot = medallion.overwrite_partitions, snapmod.write_snapshot
+
+    def commit(table, write):
+        calls[table] += 1
+        if table == crash_table and calls[table] == 2:  # the second arrival
+            raise RuntimeError(f"injected crash at {table}")
+        out = write()
+        finished.setdefault(table, []).append(time.time())
+        return out
+
+    monkeypatch.setattr(
+        medallion,
+        "overwrite_partitions",
+        lambda df, path, cols: commit(
+            os.path.basename(path), lambda: real_overwrite(df, path, cols)
+        ),
+    )
+    monkeypatch.setattr(
+        snapmod,
+        "write_snapshot",
+        lambda df, path, meta=None: commit(
+            os.path.basename(path), lambda: real_snapshot(df, path, meta=meta)
+        ),
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        medallion.run_medallion_incremental(spark, sf_dir, crashed, n_chunks=3)
+    raised_at = time.time()
+    monkeypatch.undo()
+
+    wave = {
+        "silver_events",
+        "silver_feedback",
+        "gold_fact_daily",
+        "gold_fact_feedback_daily",
+        "gold_fact_user_daily",
+        "type_user_state",
+    }
+    for table in wave - {crash_table}:
+        assert len(finished[table]) == 2, table  # both arrivals committed it
+        assert finished[table][-1] <= raised_at, table
+    assert len(finished[crash_table]) == 1
+    assert len(finished["gold_dim_user_scd2"]) == 1  # wave 2 never ran
+    staging = [
+        d for _root, dirs, _files in os.walk(crashed) for d in dirs
+        if d.startswith(".spark-staging")
+    ]
+    assert staging == []
+
+    got = outcome(
+        medallion.run_medallion_incremental(spark, sf_dir, crashed, n_chunks=3),
+        crashed,
+    )
+    assert got == want
+
+
 def test_stream_fed_medallion_survives_mid_arrival_crash(spark, sf_dir):
     """Crash between the state commit and the SCD2 commit of a streaming
     arrival, then restart: checkpoint re-delivery must replay the arrival

@@ -5,7 +5,10 @@ a hit reads exactly the schema a bare ``spark.read.parquet`` infers."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -143,3 +146,35 @@ def test_one_entry_per_path(spark, tmp_path):
     entry = tables._CATALOG[spark][key]
     assert [f.name for f in entry.schema.fields] == ["c3"]
     assert (entry.n_files, entry.n_bytes) == (1, os.path.getsize(path))
+
+
+def test_concurrent_reads_leave_one_entry_per_path(spark, sf01_dir):
+    """8 threads resolve one shared path and one path each at the same
+    moment, on a session whose catalog starts empty; a lost update would
+    leave a path without its entry."""
+    session = spark.newSession()
+    shared = f"{sf01_dir}/events.parquet"
+    own = [f"{sf01_dir}/{n}.parquet" for n in TPCH_TABLES if n != "events"][:8]
+    start = threading.Barrier(len(own), timeout=120)
+
+    def read(path):
+        start.wait()
+        return read_parquet(session, shared).schema, read_parquet(session, path).schema
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=len(own)) as pool:
+            seen = list(pool.map(read, own, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+
+    entries = tables._CATALOG[session]
+    assert set(entries) == {os.path.abspath(p) for p in [shared, *own]}
+    for path in [shared, *own]:
+        entry = entries[os.path.abspath(path)]
+        assert entry.schema == spark.read.parquet(path).schema, path
+        assert entry.n_bytes == tables.data_bytes(path), path
+    for (shared_schema, own_schema), path in zip(seen, own):
+        assert shared_schema == entries[os.path.abspath(shared)].schema
+        assert own_schema == entries[os.path.abspath(path)].schema
