@@ -976,6 +976,36 @@ def lloyd_ivf_topk(
 _IVF_INDEX_META = "_index_meta.json"
 
 
+def _write_ivf_index(
+    index: str, feat: DataFrame, n_clusters: int, seed: int, **meta
+) -> None:
+    """Train a seeded ML-lib kmeans|| quantizer on ``feat`` (``c_id``,
+    ``_cv``, ``_cn``, ``_feat``), write the assigned corpus partitioned by
+    ``_cluster`` at ``index`` and the centroids (plus ``meta``) beside it."""
+    import json
+    import os
+
+    from pyspark.ml.clustering import KMeans
+
+    model = KMeans(
+        k=n_clusters, seed=seed, featuresCol="_feat", predictionCol="_cluster",
+    ).fit(feat)
+    (
+        model.transform(feat)
+        .select("c_id", "_cv", "_cn", "_cluster")
+        .write.partitionBy("_cluster")
+        .parquet(index)
+    )
+    meta = {
+        "n_clusters": n_clusters,
+        "seed": seed,
+        **meta,
+        "centroids": [[float(x) for x in ctr] for ctr in model.clusterCenters()],
+    }
+    with open(os.path.join(index, _IVF_INDEX_META), "w") as fh:
+        json.dump(meta, fh)
+
+
 def build_ivf_served_index(
     spark,
     sf_dir: str,
@@ -985,10 +1015,11 @@ def build_ivf_served_index(
     n_clusters: int = 16,
     seed: int = 7,
 ) -> str:
-    """Build (once) and return the path of a DISK-memoized IVF index:
-    the corpus cluster-assigned by a seeded ML-lib kmeans|| quantizer and
-    written as parquet **partitioned by ``_cluster``**, with the trained
-    centroids riding in a ``_index_meta.json`` beside the data.
+    """Build (once per session and corpus content, see sources/store.py)
+    and return the path of a materialized IVF index: the corpus
+    cluster-assigned by a seeded ML-lib kmeans|| quantizer and written as
+    parquet **partitioned by ``_cluster``**, with the trained centroids
+    riding in a ``_index_meta.json`` beside the data.
 
     This is the production IVF shape at 100 TB — train once, serve many:
     the quantizer cost is paid at build time (and amortized over every
@@ -997,76 +1028,27 @@ def build_ivf_served_index(
     ``n_clusters`` clusters is a partition-PRUNED scan that never opens
     the other clusters' files (contrast :func:`ivf_topk`, which re-trains
     per session, and ``lloyd_ivf_topk``, which re-trains per QUERY to
-    stay oracle-certifiable).  Same sf-tagged, source-mtime-keyed,
-    rename-swapped scratch discipline as the CSV/ORC roundtrip rows: a
-    driver testdata regeneration invalidates the index automatically,
-    concurrent sessions race benignly on identical artifacts.
+    stay oracle-certifiable).  The store keys the index by the corpus's
+    content, so a rewritten or different corpus gets its own index.
     """
-    import json
     import os
-    import shutil
 
-    from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = (
-        f"/root/repo/.scratch/ivf_index/{table}_{tag}"
-        f"_k{n_clusters}_s{seed}"
-    )
-    marker = os.path.join(out_dir, _IVF_INDEX_META)
+    from bakery_big_data_spark.sources.store import materialize
+
     src = os.path.join(sf_dir, f"{table}.parquet")
-    stale = True
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-            # r11 ADVICE: the tag is embedded in out_dir so comparing it
-            # alone is dead code — a DIFFERENT corpus at a same-basename
-            # sibling path with an older mtime would silently serve the
-            # other corpus's neighbors.  Pin the index to the resolved
-            # source path + its full-precision mtime instead.
-            stale = (
-                meta.get("src_realpath") != os.path.realpath(src)
-                or meta.get("src_mtime") != os.path.getmtime(src)
-            )
-        except (OSError, ValueError):
-            stale = True
-    if stale:
-        tmp = f"{out_dir}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        corpus = spark.read.parquet(src)
-        feat = with_norm2(corpus, vec_col, "_cn").select(
+
+    def build(out: str) -> None:
+        feat = with_norm2(spark.read.parquet(src), vec_col, "_cn").select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("_cv"), "_cn"
         ).withColumn("_feat", array_to_vector(F.col("_cv")))
-        model = KMeans(
-            k=n_clusters, seed=seed, featuresCol="_feat",
-            predictionCol="_cluster",
-        ).fit(feat)
-        (
-            model.transform(feat)
-            .select("c_id", "_cv", "_cn", "_cluster")
-            .write.partitionBy("_cluster")
-            .parquet(tmp)
-        )
-        meta = {
-            "tag": tag,
-            "src_realpath": os.path.realpath(src),
-            "src_mtime": os.path.getmtime(src),
-            "n_clusters": n_clusters,
-            "seed": seed,
-            "centroids": [
-                [float(x) for x in ctr] for ctr in model.clusterCenters()
-            ],
-        }
-        with open(os.path.join(tmp, _IVF_INDEX_META), "w") as fh:
-            json.dump(meta, fh)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:  # lost the race — a concurrent session just won
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out_dir
+        _write_ivf_index(os.path.join(out, "ivf_index"), feat, n_clusters, seed)
+
+    out = materialize(
+        spark, "ivf_index", [src], build, id_col, vec_col, n_clusters, seed
+    )
+    return os.path.join(out, "ivf_index")
 
 
 def ivf_served_topk(
@@ -1226,41 +1208,22 @@ def build_ivf_upserted_index(
     seed: int = 7,
     holdout_mod: int = 17,
 ) -> str:
-    """Disk-memoized index certifying the upsert path: the quantizer is
+    """Materialized index certifying the upsert path: the quantizer is
     trained on the corpus MINUS the ``id %% holdout_mod == 0`` slice, the
     base index is written cluster-partitioned, and the held-out slice is
-    then :func:`ivf_index_upsert`-ed into it — all inside the tmp dir,
-    rename-swapped, so the artifact is atomic and idempotent (same
-    src-realpath+mtime staleness discipline as
-    :func:`build_ivf_served_index`)."""
-    import json
+    then :func:`ivf_index_upsert`-ed into it — all in one store build
+    (see :func:`build_ivf_served_index`), so a failed upsert leaves no
+    index behind."""
     import os
-    import shutil
 
-    from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = (
-        f"/root/repo/.scratch/ivf_index/{table}_{tag}"
-        f"_k{n_clusters}_s{seed}_up{holdout_mod}"
-    )
-    marker = os.path.join(out_dir, _IVF_INDEX_META)
+    from bakery_big_data_spark.sources.store import materialize
+
     src = os.path.join(sf_dir, f"{table}.parquet")
-    stale = True
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-            stale = (
-                meta.get("src_realpath") != os.path.realpath(src)
-                or meta.get("src_mtime") != os.path.getmtime(src)
-            )
-        except (OSError, ValueError):
-            stale = True
-    if stale:
-        tmp = f"{out_dir}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def build(out: str) -> None:
+        index = os.path.join(out, "ivf_index")
         corpus = spark.read.parquet(src)
         base = corpus.filter(F.col(id_col) % holdout_mod != 0)
         # zero-norm vectors excluded, matching ivf_index_upsert and the
@@ -1270,42 +1233,17 @@ def build_ivf_upserted_index(
         ).select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("_cv"), "_cn"
         ).withColumn("_feat", array_to_vector(F.col("_cv")))
-        model = KMeans(
-            k=n_clusters, seed=seed, featuresCol="_feat",
-            predictionCol="_cluster",
-        ).fit(feat)
-        (
-            model.transform(feat)
-            .select("c_id", "_cv", "_cn", "_cluster")
-            .write.partitionBy("_cluster")
-            .parquet(tmp)
-        )
-        meta = {
-            "tag": tag,
-            "src_realpath": os.path.realpath(src),
-            "src_mtime": os.path.getmtime(src),
-            "n_clusters": n_clusters,
-            "seed": seed,
-            "holdout_mod": holdout_mod,
-            "centroids": [
-                [float(x) for x in ctr] for ctr in model.clusterCenters()
-            ],
-        }
-        with open(os.path.join(tmp, _IVF_INDEX_META), "w") as fh:
-            json.dump(meta, fh)
-        # the upsert happens INSIDE the tmp dir so the swap is atomic:
-        # readers either see the pre-upsert artifact never, or the full
-        # base+upserted index
+        _write_ivf_index(index, feat, n_clusters, seed, holdout_mod=holdout_mod)
         ivf_index_upsert(
             spark,
-            tmp,
+            index,
             corpus.filter(F.col(id_col) % holdout_mod == 0),
             id_col,
             vec_col,
         )
-        shutil.rmtree(out_dir, ignore_errors=True)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:  # lost the race — a concurrent session just won
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out_dir
+
+    out = materialize(
+        spark, "ivf_index_upserted", [src], build,
+        id_col, vec_col, n_clusters, seed, holdout_mod,
+    )
+    return os.path.join(out, "ivf_index")

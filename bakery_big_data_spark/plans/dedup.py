@@ -206,14 +206,10 @@ _INTER_CACHE = PlanCache(max_entries=2)
 #: Σ df² joins' codegen recompute).  Gate the persist on the input corpus
 #: size: below the threshold the shared frame is pinned, above it each
 #: consumer keeps the plain (unpersisted) builder — identical plan, no
-#: cache materialization.  Parameterised for non-local tiers; the default
-#: sits between the measured ×10 win and ×100 loss (documents.parquet is
-#: ~0.6 MB at sf0.1, ~6 MB at ×10, ~60 MB at ×100).
-_INTER_PERSIST_MAX_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_INTER_PERSIST_MAX_BYTES", str(24 * 1024 * 1024)
-    )
-)
+#: cache materialization.  The threshold sits between the measured ×10 win
+#: and ×100 loss (documents.parquet is ~0.6 MB at sf0.1, ~6 MB at ×10,
+#: ~60 MB at ×100).
+_INTER_PERSIST_MAX_BYTES = 24 * 1024 * 1024
 
 
 def _inter_persist_ok(sf_dir: str) -> bool:
@@ -732,37 +728,19 @@ def _banded_gate_oracle() -> str:
         "factor, not just where banding recall is luckily 100%",
 )
 def streaming_dedup_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from bakery_big_data_spark.plans.pipeline_q import _package_src_mtime
+    from bakery_big_data_spark.sources.store import materialize, table_files
     from bakery_big_data_spark.streaming.dedup_gate import (
         run_streaming_dedup_gate,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/dedup_gate/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "documents.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         dec = run_streaming_dedup_gate(spark, sf_dir, base, n_chunks=4)
-        dec.write.mode("overwrite").parquet(f"{base}/decisions_out")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        dec.write.parquet(f"{base}/decisions_out")
+
+    base = materialize(
+        spark, "streaming_dedup_ingest_gate", table_files(sf_dir, "documents"),
+        build,
+    )
     return spark.read.parquet(f"{base}/decisions_out")
 
 

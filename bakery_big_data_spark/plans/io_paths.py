@@ -2,9 +2,9 @@
 (S5/S7/S12 demonstrated through the driver contract).
 
 ``partition_pruned_scan`` materializes a date-partitioned copy of ``events``
-once per scale factor (idempotent, under the repo-local ``.scratch/``
-directory), then aggregates one day through the partition filter — the plan
-touches exactly one partition directory (asserted via explain in
+once per session and events content (in the session store,
+sources/store.py), then aggregates one day through the partition filter —
+the plan touches exactly one partition directory (asserted via explain in
 tests/test_io.py; reference semantics: PARTITIONED BY (date) +
 literal-date scans, init_iceberg_tables.py:46 / bronze_to_silver.py:39-43).
 
@@ -25,29 +25,23 @@ from pyspark.sql import functions as F
 
 from bakery_big_data_spark.plans.base import register, sql_dsum, t
 from bakery_big_data_spark.sources.sinks import write_partitioned
-
-_SCRATCH = "/root/repo/.scratch/partitioned"
+from bakery_big_data_spark.sources.store import materialize, table_files, table_name
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize events partitioned by event_date (once per sf).
+    """Materialize events partitioned by event_date, once per session and
+    events content."""
 
-    Rebuilt whenever the source parquet is newer than the materialized copy
-    — testdata can be regenerated between driver rounds."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_SCRATCH, f"events_by_date_{tag}")
-    marker = os.path.join(path, "_SUCCESS")
-    src = os.path.join(sf_dir, "events.parquet")
-    stale = (
-        not os.path.exists(marker)
-        or os.path.getmtime(src) >= os.path.getmtime(marker)
-    )
-    if stale:
+    def build(out: str) -> None:
         ev = t(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         )
-        write_partitioned(ev, path, ["event_date"])
-    return path
+        write_partitioned(ev, os.path.join(out, "events_by_date"), ["event_date"])
+
+    out = materialize(
+        spark, "partitioned_events", table_files(sf_dir, "events"), build
+    )
+    return os.path.join(out, "events_by_date")
 
 
 @register(
@@ -85,35 +79,32 @@ _N_BUCKETS = 8
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize orders + customer as bucketed/sorted catalog tables
-    (once per catalog lifetime and scale factor): ``bucketBy(8, custkey)
+    (once per session and input content): ``bucketBy(8, custkey)
     .sortBy(custkey)`` on both sides, so they are hash-co-located AND
     pre-sorted on the join key.
 
-    Tables are EXTERNAL (explicit ``path`` under ``.scratch/``) — bucket
-    metadata lives in the session catalog, so a fresh catalog must rewrite
-    even if a previous session left data behind (bucketed reads without the
-    catalog's bucket spec would silently lose co-location).
+    Tables are EXTERNAL (explicit ``path`` in the session store) — bucket
+    metadata lives in the session catalog, and each table's name derives
+    from its store directory, so a session never reads another session's
+    table (``newSession()`` siblings share the catalog, not the store).
     """
-    import shutil
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    out: list[str] = []
-    for table, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
-        name = f"bkt_{table}_{tag}"
-        if not spark.catalog.tableExists(name):
-            path = os.path.join("/root/repo/.scratch/bucketed", name)
-            if os.path.exists(path):
-                shutil.rmtree(path)  # data from a previous catalog's table
+    def build(out: str) -> None:
+        for table, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
             (
                 t(spark, sf_dir, table)
                 .write.bucketBy(_N_BUCKETS, key)
                 .sortBy(key)
-                .option("path", path)
+                .mode("overwrite")
+                .option("path", os.path.join(out, table))
                 .format("parquet")
-                .saveAsTable(name)
+                .saveAsTable(table_name(f"bkt_{table}", out))
             )
-        out.append(name)
-    return out[0], out[1]
+
+    out = materialize(
+        spark, "bucketed", table_files(sf_dir, "orders", "customer"), build
+    )
+    return table_name("bkt_orders", out), table_name("bkt_customer", out)
 
 
 @register(
@@ -149,43 +140,36 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _csv_dir(tag: str) -> str:
-    # sf-tagged so concurrent sessions at different scale factors (bench
-    # at sf0.1 while the test suite runs at sf0.001) never share a
-    # directory — the rename race can then only ever install a copy of
-    # the SAME data
-    return f"/root/repo/.scratch/csv_ddl/customer_sample_csv_{tag}"
-
-
-def _csv_scratch_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize a CSV copy of a customer slice at an sf-tagged path,
-    keyed on source mtime: a driver testdata regeneration rewrites the CSV
-    before either engine reads it.  Values are stringified
+def _csv_roundtrip_table(spark: SparkSession, sf_dir: str) -> str:
+    """Write a customer slice as CSV, read it back with an explicit schema
+    and CTAS it into a catalog database, once per session and customer
+    content; returns the catalog table.  Values are stringified
     deterministically (acctbal pre-cast to DECIMAL(15,2); the generator
     emits exact 2-decimal values at every sf, so the cast is exact) and
     the round trip is certified against the SOURCE table by the oracle —
     headers use dotted names ('cust.key', 'acct.bal') to exercise
-    quoted-identifier handling on read."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = _csv_dir(tag)
-    marker = os.path.join(out_dir, "_tag.txt")
-    src = os.path.join(sf_dir, "customer.parquet")
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            stale = fh.read().strip() != tag or os.path.getmtime(
-                src
-            ) >= os.path.getmtime(marker)
-    if stale:
-        import shutil
+    quoted-identifier handling on read.  The database name derives from
+    the store directory, so its location is this session's."""
+    from pyspark.sql.types import (
+        DecimalType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
 
-        # Build in a session-private temp dir and swap via rename, so a
-        # CONCURRENT session at the SAME scale factor never observes a
-        # half-written directory and two writers never collide on
-        # PATH_ALREADY_EXISTS; the rename loser discards its copy and
-        # uses the winner's (identical data — the path is sf-tagged).
-        tmp = f"{out_dir}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    from bakery_big_data_spark.sources.sinks import create_database
+
+    schema = StructType(
+        [
+            StructField("cust.key", LongType()),
+            StructField("segment", StringType()),
+            StructField("acct.bal", DecimalType(15, 2)),
+        ]
+    )
+
+    def build(out: str) -> None:
+        csv_dir = os.path.join(out, "customer_sample_csv")
         (
             t(spark, sf_dir, "customer")
             .filter(F.col("c_custkey") <= 2000)
@@ -196,16 +180,22 @@ def _csv_scratch_path(spark: SparkSession, sf_dir: str) -> str:
             )
             .coalesce(1)
             .write.option("header", True)
-            .csv(tmp)
+            .csv(csv_dir)
         )
-        with open(os.path.join(tmp, "_tag.txt"), "w") as fh:
-            fh.write(tag)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:  # lost the race — a concurrent session just won
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out_dir
+        csv = spark.read.schema(schema).option("header", True).csv(csv_dir)
+        db = table_name("csv_ddl", out)
+        create_database(spark, db, os.path.join(out, "db"))
+        # a failed earlier attempt may have left the table in the catalog
+        spark.sql(f"DROP TABLE IF EXISTS {db}.customer_roundtrip")
+        csv.createOrReplaceTempView("_csv_src")
+        spark.sql(
+            f"CREATE TABLE {db}.customer_roundtrip USING parquet AS "
+            "SELECT `cust.key` AS cust_key, segment, `acct.bal` AS acct_bal "
+            "FROM _csv_src"
+        )
+
+    out = materialize(spark, "csv_ddl", table_files(sf_dir, "customer"), build)
+    return f"{table_name('csv_ddl', out)}.customer_roundtrip"
 
 
 @register(
@@ -220,7 +210,7 @@ def _csv_scratch_path(spark: SparkSession, sf_dir: str) -> str:
     WHERE c_custkey <= 2000
     GROUP BY c_mktsegment
     """,
-    doc="S4+S12+S13 in one driver row: a CSV scratch written by the engine "
+    doc="S4+S12+S13 in one driver row: a CSV copy written by the engine "
         "is read back with an EXPLICIT schema (no inference — dotted "
         "headers 'cust.key'/'acct.bal' exercise backtick quoting, decimal "
         "casts keep the text round-trip exact: the generator emits exact "
@@ -231,49 +221,11 @@ def _csv_scratch_path(spark: SparkSession, sf_dir: str) -> str:
         "catalog table.  The oracle recomputes the aggregate from the "
         "SOURCE customer table, so the hash certifies the whole "
         "write-CSV -> read-CSV -> CTAS -> aggregate round trip end to "
-        "end (and the sf-tagged scratch path means concurrent sessions "
-        "at different scale factors never share a directory)",
+        "end",
 )
 def csv_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import (
-        DecimalType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from bakery_big_data_spark.sources.sinks import create_database
-
-    path = _csv_scratch_path(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("cust.key", LongType()),
-            StructField("segment", StringType()),
-            StructField("acct.bal", DecimalType(15, 2)),
-        ]
-    )
-    csv = spark.read.schema(schema).option("header", True).csv(path)
-
-    # sf-tagged table name: concurrent sessions at different scale factors
-    # get distinct managed-table locations, same as the CSV scratch
-    tbl = "customer_roundtrip_" + os.path.basename(
-        os.path.normpath(sf_dir)
-    ).replace(".", "_")
-    create_database(spark, "csv_ddl", "/root/repo/.scratch/csv_ddl/db")
-    spark.sql(f"DROP TABLE IF EXISTS csv_ddl.{tbl}")
-    # a previous SESSION's managed-table files survive its in-memory
-    # catalog; clear the location or CTAS fails LOCATION_ALREADY_EXISTS
-    import shutil
-
-    shutil.rmtree(f"/root/repo/.scratch/csv_ddl/db/{tbl}", ignore_errors=True)
-    csv.createOrReplaceTempView("_csv_src")
-    spark.sql(
-        f"CREATE TABLE csv_ddl.{tbl} USING parquet AS "
-        "SELECT `cust.key` AS cust_key, segment, `acct.bal` AS acct_bal "
-        "FROM _csv_src"
-    )
-    return spark.table(f"csv_ddl.{tbl}").groupBy("segment").agg(
+    tbl = _csv_roundtrip_table(spark, sf_dir)
+    return spark.table(tbl).groupBy("segment").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum("acct_bal").cast("double").alias("total_balance"),
         F.max("cust_key").cast("bigint").alias("max_key"),
@@ -281,29 +233,13 @@ def csv_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _snapshot_table_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize a 2-version snapshot table from events (idempotent per
-    scale factor, rebuilt when the source parquet is newer)."""
-    from bakery_big_data_spark.sources.snapshots import (
-        _load_manifest,
-        write_snapshot,
-    )
+    """Materialize a 2-version snapshot table from events, once per session
+    and events content; a build that fails between the two commits leaves
+    no entry, so the next call rebuilds both versions."""
+    from bakery_big_data_spark.sources.snapshots import write_snapshot
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join("/root/repo/.scratch/snapshots", f"events_{tag}")
-    marker = os.path.join(path, "_snapshot_manifest.json")
-    src = os.path.join(sf_dir, "events.parquet")
-    stale = (
-        not os.path.exists(marker)
-        or os.path.getmtime(src) >= os.path.getmtime(marker)
-        # a crash between the two write_snapshot calls leaves a valid
-        # manifest with only v1 — treat the table as committed only when
-        # both versions exist, else rebuild from scratch
-        or len(_load_manifest(path)["versions"]) < 2
-    )
-    if stale:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build(out: str) -> None:
+        path = os.path.join(out, "events")
         base = (
             t(spark, sf_dir, "events")
             .filter(F.col("event_id") < 2000)
@@ -317,7 +253,9 @@ def _snapshot_table_path(spark: SparkSession, sf_dir: str) -> str:
             ),
         )
         write_snapshot(v2, path)
-    return path
+
+    out = materialize(spark, "snapshot_events", table_files(sf_dir, "events"), build)
+    return os.path.join(out, "events")
 
 
 @register(
@@ -594,44 +532,24 @@ def layout_hilbert_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orc_scratch_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize an ORC copy of an orders slice at an sf-tagged path,
-    keyed on source mtime — the same staleness/rename discipline as the
-    CSV scratch (a driver testdata regeneration rewrites it; concurrent
-    sessions at one sf race benignly on identical data).  Unlike the CSV
-    row there is no text stringification: ORC is a typed columnar format,
-    so doubles round-trip bit-exactly with no decimal staging."""
-    import shutil
+def _orc_copy_path(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize an ORC copy of an orders slice, once per session and
+    orders content.  Unlike the CSV row there is no text stringification:
+    ORC is a typed columnar format, so doubles round-trip bit-exactly with
+    no decimal staging."""
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = f"/root/repo/.scratch/orc_roundtrip/orders_orc_{tag}"
-    marker = os.path.join(out_dir, "_tag.txt")
-    src = os.path.join(sf_dir, "orders.parquet")
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            stale = fh.read().strip() != tag or os.path.getmtime(
-                src
-            ) >= os.path.getmtime(marker)
-    if stale:
-        tmp = f"{out_dir}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def build(out: str) -> None:
         (
             t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") <= 8000)
             .select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
             .coalesce(1)
             .write.option("compression", "zstd")
-            .orc(tmp)
+            .orc(os.path.join(out, "orders_orc"))
         )
-        with open(os.path.join(tmp, "_tag.txt"), "w") as fh:
-            fh.write(tag)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:  # lost the race — a concurrent session just won
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out_dir
+
+    out = materialize(spark, "orc_roundtrip", table_files(sf_dir, "orders"), build)
+    return os.path.join(out, "orders_orc")
 
 
 @register(
@@ -653,8 +571,8 @@ def _orc_scratch_path(spark: SparkSession, sf_dir: str) -> str:
         "to zstd ORC by the engine, read back with an EXPLICIT schema, "
         "and aggregated; the oracle recomputes from the SOURCE parquet, "
         "so the hash certifies the typed write->read round trip end to "
-        "end (doubles bit-exact — no text staging).  Same sf-tagged, "
-        "mtime-keyed, rename-swapped scratch discipline as the CSV row",
+        "end (doubles bit-exact — no text staging); like the CSV row, "
+        "the copy lives in the session store (sources/store.py)",
 )
 def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
@@ -665,7 +583,7 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    path = _orc_scratch_path(spark, sf_dir)
+    path = _orc_copy_path(spark, sf_dir)
     schema = StructType(
         [
             StructField("o_orderkey", LongType()),

@@ -24,6 +24,7 @@ from bakery_big_data_spark.pipeline.medallion import (
 )
 from bakery_big_data_spark.operators.cache import PlanCache
 from bakery_big_data_spark.plans.base import register
+from bakery_big_data_spark.sources.store import materialize, table_files
 
 #: Silver is a MATERIALIZED layer in a medallion architecture — production
 #: writes it once and every gold/ML consumer reads the table.  The in-session
@@ -44,28 +45,6 @@ def _silver_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: silver_events(bronze_events(spark, sf_dir)).persist(),
     )
 
-
-def _package_src_mtime() -> float:
-    """Max mtime over every .py in the package — the staleness key for
-    materialized incremental-runner scratch.  The runners compose many
-    operator modules (mutation, snapshots, dedup, keys, ...), so keying
-    on the runner module alone would let an operator edit be 'certified'
-    against stale scratch output; walking the package dir (~40 files)
-    closes that hole for the cost of one os.walk."""
-    import os
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    newest = 0.0
-    for root, _dirs, files in os.walk(pkg_dir):
-        if "__pycache__" in root:
-            continue
-        for fn in files:
-            if fn.endswith(".py"):
-                try:
-                    newest = max(newest, os.path.getmtime(os.path.join(root, fn)))
-                except OSError:
-                    pass
-    return newest
 
 _SILVER_SQL = f"""
     WITH bronze AS (
@@ -777,36 +756,16 @@ _MEDALLION_PARITY_SQL = f"""
         "open snapshot is the cross-run invariant)",
 )
 def medallion_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from bakery_big_data_spark.pipeline.medallion import (
         run_medallion_incremental,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/medallion_incr/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "events.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         run_medallion_incremental(spark, sf_dir, base, n_chunks=4)
-        with open(marker, "w") as fh:
-            fh.write("ok")
 
+    base = materialize(
+        spark, "medallion_incremental_parity", table_files(sf_dir, "events"), build
+    )
     return _medallion_parity_frame(spark, base)
 
 
@@ -831,36 +790,17 @@ def medallion_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the is_training verdict",
 )
 def curation_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from bakery_big_data_spark.pipeline.curation import (
         run_curation_incremental,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/curation_incr/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "documents.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         manifest = run_curation_incremental(spark, sf_dir, base, n_chunks=4)
-        manifest.write.mode("overwrite").parquet(f"{base}/manifest")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        manifest.write.parquet(f"{base}/manifest")
+
+    base = materialize(
+        spark, "curation_incremental_parity", table_files(sf_dir, "documents"), build
+    )
     return spark.read.parquet(f"{base}/manifest")
 
 
@@ -883,38 +823,19 @@ def curation_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arrival_plan='interleaved')",
 )
 def curation_outoforder_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from bakery_big_data_spark.pipeline.curation import (
         run_curation_incremental,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/curation_ooo/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "documents.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         manifest = run_curation_incremental(
             spark, sf_dir, base, n_chunks=4, arrival_plan="interleaved"
         )
-        manifest.write.mode("overwrite").parquet(f"{base}/manifest")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        manifest.write.parquet(f"{base}/manifest")
+
+    base = materialize(
+        spark, "curation_outoforder_parity", table_files(sf_dir, "documents"), build
+    )
     return spark.read.parquet(f"{base}/manifest")
 
 
@@ -939,36 +860,16 @@ def curation_outoforder_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_gold_parity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-
     from bakery_big_data_spark.pipeline.medallion import (
         run_medallion_stream_fed,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/medallion_streamfed/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "events.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         run_medallion_stream_fed(spark, sf_dir, base, n_chunks=4)
-        with open(marker, "w") as fh:
-            fh.write("ok")
 
+    base = materialize(
+        spark, "streaming_incremental_gold_parity", table_files(sf_dir, "events"), build
+    )
     return _medallion_parity_frame(spark, base)
 
 
@@ -991,34 +892,15 @@ def streaming_incremental_gold_parity(
         "gated/deduped/decontaminated/split chain",
 )
 def streaming_curation_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from bakery_big_data_spark.pipeline.curation import (
         run_curation_stream_fed,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/curation_streamfed/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "documents.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         manifest = run_curation_stream_fed(spark, sf_dir, base, n_chunks=4)
-        manifest.write.mode("overwrite").parquet(f"{base}/manifest")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        manifest.write.parquet(f"{base}/manifest")
+
+    base = materialize(
+        spark, "streaming_curation_parity", table_files(sf_dir, "documents"), build
+    )
     return spark.read.parquet(f"{base}/manifest")

@@ -916,37 +916,19 @@ def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_semantic_ingest_gate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-
-    from bakery_big_data_spark.plans.pipeline_q import _package_src_mtime
+    from bakery_big_data_spark.sources.store import materialize, table_files
     from bakery_big_data_spark.streaming.dedup_gate import (
         run_streaming_semantic_gate,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/semantic_gate/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         dec = run_streaming_semantic_gate(spark, sf_dir, base, n_chunks=4)
-        dec.write.mode("overwrite").parquet(f"{base}/decisions_out")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        dec.write.parquet(f"{base}/decisions_out")
+
+    base = materialize(
+        spark, "streaming_semantic_ingest_gate",
+        table_files(sf_dir, "embeddings"), build,
+    )
     return spark.read.parquet(f"{base}/decisions_out")
 
 

@@ -2,9 +2,10 @@
 
 Runs the real Structured Streaming pipeline (file JSON-lines source →
 explicit-schema decode → checkpointed foreachBatch append sink,
-``availableNow`` trigger) into a repo-local scratch table, then returns the
-landed table.  The checkpoint makes the query idempotent across driver
-re-runs (no new input → no new rows), so the oracle — the same slice of
+``availableNow`` trigger) into a table in the session store
+(sources/store.py), then returns the landed table.  The checkpoint makes
+the query idempotent across re-runs in a session (no new input → no new
+rows), so the oracle — the same slice of
 ``events`` straight from parquet — holds on every invocation and
 hash-checks the full S1→S2→S3→T4 path including JSON round-trip fidelity.
 """
@@ -17,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bakery_big_data_spark.plans.base import register, t
+from bakery_big_data_spark.sources.store import materialize, table_files
 from bakery_big_data_spark.streaming.ingest import (
     JSON_OPTIONS,
     read_json_stream,
@@ -24,30 +26,33 @@ from bakery_big_data_spark.streaming.ingest import (
     windowed_counts,
 )
 
-#: Versioned scratch root: bump the suffix whenever the serialized JSON
-#: format changes (e.g. the NTZ→LTZ timestamp normalization) so stale
-#: sources from earlier code are never replayed into the checkpointed sink.
-_SCRATCH = "/root/repo/.scratch/streaming_replay_v2"
 _N = 1500
 
 
-def _needs_rebuild(src: str, sf_dir: str) -> bool:
-    """True when the materialized JSON source is missing or older than the
-    driver's events parquet — testdata can be regenerated between rounds,
-    and a checkpointed sink would otherwise happily serve stale rows."""
-    if not os.path.exists(src):
-        return True
-    events = os.path.join(sf_dir, "events.parquet")
-    try:
-        return os.path.getmtime(events) >= os.path.getmtime(src)
-    except OSError:
-        return True
+def _write_json_src(src: str, df: DataFrame) -> None:
+    df.select(
+        F.to_json(F.struct(*df.columns), JSON_OPTIONS).alias("value")
+    ).coalesce(1).write.mode("overwrite").text(src)
 
 
-def _reset_scratch(base: str) -> None:
-    import shutil
+def _events_source(spark: SparkSession, sf_dir: str, name: str, write) -> str:
+    """Store directory of streaming row ``name``: ``write(ev, base)`` lays
+    down its JSON source(s) from the first ``_N`` events, once per session
+    and events content.  The row's sink output and checkpoint live beside
+    them, so a repeat call in the session resumes the checkpoint."""
 
-    shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
+        write(t(spark, sf_dir, "events").filter(F.col("event_id") < _N), base)
+
+    return materialize(spark, name, table_files(sf_dir, "events"), build)
+
+
+def _plain_source(ev: DataFrame, base: str) -> None:
+    _write_json_src(os.path.join(base, "src"), ev)
+
+
+def _paths(base: str, *names: str) -> list[str]:
+    return [os.path.join(base, n) for n in names]
 
 
 @register(
@@ -62,19 +67,8 @@ def _reset_scratch(base: str) -> None:
         "(watermark/supervision covered in tests/test_streaming.py)",
 )
 def streaming_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag)
-    src, out, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)  # out+ckpt too: the checkpoint pins old offsets
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
-        ev.select(
-            F.to_json(F.struct(*ev.columns), JSON_OPTIONS).alias("value")
-        ).coalesce(1).write.mode("overwrite").text(src)
+    base = _events_source(spark, sf_dir, "streaming_ingest_replay", _plain_source)
+    src, out, ckpt = _paths(base, "src", "out", "ckpt")
     q = start_append_sink(
         read_json_stream(spark, src), out, ckpt, available_now=True,
         query_name="replay",
@@ -110,19 +104,8 @@ def streaming_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'not present')",
 )
 def streaming_watermark_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_wm")
-    src, out, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
-        ev.select(
-            F.to_json(F.struct(*ev.columns), JSON_OPTIONS).alias("value")
-        ).coalesce(1).write.mode("overwrite").text(src)
+    base = _events_source(spark, sf_dir, "streaming_watermark_parity", _plain_source)
+    src, out, ckpt = _paths(base, "src", "out", "ckpt")
     agg = windowed_counts(
         read_json_stream(spark, src),
         watermark_delay="10 minutes",
@@ -175,19 +158,8 @@ def streaming_watermark_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bakery_big_data_spark.streaming.ingest import session_window_counts
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_sess")
-    src, out, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
-        ev.select(
-            F.to_json(F.struct(*ev.columns), JSON_OPTIONS).alias("value")
-        ).coalesce(1).write.mode("overwrite").text(src)
+    base = _events_source(spark, sf_dir, "streaming_session_windows", _plain_source)
+    src, out, ckpt = _paths(base, "src", "out", "ckpt")
     agg = session_window_counts(
         read_json_stream(spark, src),
         watermark_delay="10 minutes",
@@ -198,12 +170,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out).select(
         "user_id", "session_start", "n_events", "session_value"
     )
-
-
-def _write_json_src(spark: SparkSession, sf_dir: str, src: str, df) -> None:
-    df.select(
-        F.to_json(F.struct(*df.columns), JSON_OPTIONS).alias("value")
-    ).coalesce(1).write.mode("overwrite").text(src)
 
 
 @register(
@@ -224,18 +190,12 @@ def _write_json_src(spark: SparkSession, sf_dir: str, src: str, df) -> None:
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bakery_big_data_spark.streaming.ingest import dedup_stream
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_dedup")
-    src, out, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
+    def write(ev: DataFrame, base: str) -> None:
         dup = ev.unionAll(ev.filter(F.col("event_id") % 5 == 0))
-        _write_json_src(spark, sf_dir, src, dup)
+        _write_json_src(os.path.join(base, "src"), dup)
+
+    base = _events_source(spark, sf_dir, "streaming_dedup_replay", write)
+    src, out, ckpt = _paths(base, "src", "out", "ckpt")
     deduped = dedup_stream(read_json_stream(spark, src), watermark_delay="10 minutes")
     q = start_append_sink(
         deduped, out, ckpt, available_now=True, query_name="dedup_replay"
@@ -280,24 +240,17 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bakery_big_data_spark.streaming.ingest import interval_join_streams
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_ssj")
-    src_l, src_r, out, ckpt = (
-        os.path.join(base, "src_l"),
-        os.path.join(base, "src_r"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src_l, sf_dir) or _needs_rebuild(src_r, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
+    def write(ev: DataFrame, base: str) -> None:
         _write_json_src(
-            spark, sf_dir, src_l,
+            os.path.join(base, "src_l"),
             ev.filter(F.col("event_type").isin("click", "view")),
         )
         _write_json_src(
-            spark, sf_dir, src_r, ev.filter(F.col("event_type") == "purchase")
+            os.path.join(base, "src_r"), ev.filter(F.col("event_type") == "purchase")
         )
+
+    base = _events_source(spark, sf_dir, "streaming_stream_stream_join", write)
+    src_l, src_r, out, ckpt = _paths(base, "src_l", "src_r", "out", "ckpt")
     joined = interval_join_streams(
         read_json_stream(spark, src_l),
         read_json_stream(spark, src_r),
@@ -338,17 +291,8 @@ def streaming_versioned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_snapshot_rollup_sink,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_vroll")
-    src, table, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "table"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
-        _write_json_src(spark, sf_dir, src, ev)
+    base = _events_source(spark, sf_dir, "streaming_versioned_rollup", _plain_source)
+    src, table, ckpt = _paths(base, "src", "table", "ckpt")
     q = start_snapshot_rollup_sink(
         read_json_stream(spark, src), table, ckpt,
         query_name="vroll_replay",
@@ -400,29 +344,16 @@ def streaming_custom_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_synthetic_source(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_gensrc")
-    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    import bakery_big_data_spark.sources.generator as genmod
 
-    gen_src = genmod.__file__
+    def build(base: str) -> None:
+        out, ckpt = _paths(base, "out", "ckpt")
 
-    def _stale() -> bool:
-        if not os.path.exists(out):
-            return True
-        try:
-            return os.path.getmtime(gen_src) >= os.path.getmtime(out)
-        except OSError:
-            return True
+        def _landed() -> int:
+            try:
+                return spark.read.parquet(out).count()
+            except Exception:
+                return 0
 
-    def _landed() -> int:
-        try:
-            return spark.read.parquet(out).count()
-        except Exception:
-            return 0
-
-    if _stale():
-        _reset_scratch(base)
         q = (
             spark.readStream.format("synthetic_events")
             .option("n_rows", _GEN_N)
@@ -448,14 +379,14 @@ def streaming_custom_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
         q.awaitTermination()
         if (got := _landed()) < _GEN_N:
-            # never leave a partial 'out' behind: _stale() is mtime-based
-            # and would treat it as fresh forever
-            _reset_scratch(base)
+            # raising leaves no store entry: the next call redrains
             raise TimeoutError(
                 f"synthetic source drained only {got}/{_GEN_N} rows "
                 "within 120s"
             )
-    landed = spark.read.parquet(out)
+
+    base = materialize(spark, "streaming_custom_source_agg", [], build)
+    landed = spark.read.parquet(os.path.join(base, "out"))
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
@@ -508,18 +439,10 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from bakery_big_data_spark.streaming.stateful import idle_session_flush
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_stateful_sess")
-    src, out, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
+    def write(ev: DataFrame, base: str) -> None:
         from pyspark.sql import Window as _W
 
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
+        src = os.path.join(base, "src")
         # chronological quarters via ntile — NO .collect(): each bucket is
         # appended as its own file in order, so the file source (mtime
         # order) replays event time monotonically across micro-batches
@@ -551,6 +474,9 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value"
             )
         ).coalesce(1).write.mode("append").text(src)
+
+    base = _events_source(spark, sf_dir, "streaming_stateful_sessions", write)
+    src, out, ckpt = _paths(base, "src", "out", "ckpt")
     stream = idle_session_flush(
         read_json_stream(spark, src, max_files_per_trigger=1),
         watermark_delay="10 minutes",
@@ -567,19 +493,13 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _interval_join_sources(
-    spark: SparkSession, sf_dir: str, base: str, src_l: str, src_r: str
-) -> None:
-    """Materialize the two interval-join replay sides (touchpoints /
-    purchases) as chronological JSON sources, each finished with a
-    far-future sentinel batch so every watermark passes every real row's
-    interval end and all pending outer-join state expires."""
-    if not (_needs_rebuild(src_l, sf_dir) or _needs_rebuild(src_r, sf_dir)):
-        return
+def _interval_join_sources(ev: DataFrame, base: str) -> None:
+    """Write the two interval-join replay sides (touchpoints / purchases)
+    as chronological JSON sources ``src_l`` and ``src_r``, each finished
+    with a far-future sentinel batch so every watermark passes every real
+    row's interval end and all pending outer-join state expires."""
     import time as _time
 
-    _reset_scratch(base)
-    ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
     sentinel = ev.agg(
         F.lit(999999).cast("long").alias("event_id"),
         (F.max("ts") + F.expr("INTERVAL 10 HOURS")).alias("ts"),
@@ -589,11 +509,11 @@ def _interval_join_sources(
         F.lit("{}").alias("props"),
     )
     for src, flt in (
-        (src_l, F.col("event_type").isin("click", "view")),
-        (src_r, F.col("event_type") == "purchase"),
+        (os.path.join(base, "src_l"), F.col("event_type").isin("click", "view")),
+        (os.path.join(base, "src_r"), F.col("event_type") == "purchase"),
     ):
         side = ev.filter(flt)
-        _write_json_src(spark, sf_dir, src, side)
+        _write_json_src(src, side)
         _time.sleep(0.05)
         sentinel.select(
             F.to_json(F.struct(*sentinel.columns), JSON_OPTIONS).alias(
@@ -639,15 +559,10 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
         interval_left_join_streams,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_sslj")
-    src_l, src_r, out, ckpt = (
-        os.path.join(base, "src_l"),
-        os.path.join(base, "src_r"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
+    base = _events_source(
+        spark, sf_dir, "streaming_stream_stream_left_join", _interval_join_sources
     )
-    _interval_join_sources(spark, sf_dir, base, src_l, src_r)
+    src_l, src_r, out, ckpt = _paths(base, "src_l", "src_r", "out", "ckpt")
     joined = interval_left_join_streams(
         read_json_stream(spark, src_l, max_files_per_trigger=1),
         read_json_stream(spark, src_r, max_files_per_trigger=1),
@@ -697,18 +612,12 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
 def streaming_merge_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bakery_big_data_spark.streaming.ingest import start_merge_sink
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_mergeup")
-    src, table, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "table"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
+    def write(ev: DataFrame, base: str) -> None:
         dup = ev.unionAll(ev.filter(F.col("event_id") % 3 == 0))
-        _write_json_src(spark, sf_dir, src, dup)
+        _write_json_src(os.path.join(base, "src"), dup)
+
+    base = _events_source(spark, sf_dir, "streaming_merge_upsert_state", write)
+    src, table, ckpt = _paths(base, "src", "table", "ckpt")
     stream = read_json_stream(spark, src, max_files_per_trigger=1).select(
         "user_id", "ts", "event_type", "value"
     )
@@ -764,15 +673,10 @@ def streaming_stream_stream_full_join(
         interval_full_join_streams,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_ssfj")
-    src_l, src_r, out, ckpt = (
-        os.path.join(base, "src_l"),
-        os.path.join(base, "src_r"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
+    base = _events_source(
+        spark, sf_dir, "streaming_stream_stream_full_join", _interval_join_sources
     )
-    _interval_join_sources(spark, sf_dir, base, src_l, src_r)
+    src_l, src_r, out, ckpt = _paths(base, "src_l", "src_r", "out", "ckpt")
     joined = interval_full_join_streams(
         read_json_stream(spark, src_l, max_files_per_trigger=1),
         read_json_stream(spark, src_r, max_files_per_trigger=1),
@@ -825,24 +729,17 @@ def streaming_dead_letter_routing(
         start_dlq_sink,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_dlq")
-    src, out, dlq, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "dlq"),
-        os.path.join(base, "ckpt"),
-    )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
+    def write(ev: DataFrame, base: str) -> None:
         line = F.when(
             F.col("event_id") % 37 == 0,
             F.concat(F.lit("CORRUPT|"), F.col("event_id").cast("string")),
         ).otherwise(F.to_json(F.struct(*ev.columns), JSON_OPTIONS))
         ev.select(line.alias("value")).coalesce(1).write.mode(
             "overwrite"
-        ).text(src)
+        ).text(os.path.join(base, "src"))
+
+    base = _events_source(spark, sf_dir, "streaming_dead_letter_routing", write)
+    src, out, dlq, ckpt = _paths(base, "src", "out", "dlq", "ckpt")
     q = start_dlq_sink(
         read_json_stream_with_raw(spark, src), out, dlq, ckpt,
         query_name="dlq_replay",
@@ -891,38 +788,19 @@ _RATE_QUOTA = 2
         "keys — state and per-batch work stay bounded at 100 TB",
 )
 def streaming_rate_limit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from bakery_big_data_spark.plans.pipeline_q import _package_src_mtime
     from bakery_big_data_spark.streaming.rate_gate import (
         run_streaming_rate_gate,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/root/repo/.scratch/rate_gate/{tag}"
-    marker = f"{base}/_done"
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        try:
-            src_mtime = max(
-                _package_src_mtime(),
-                os.path.getmtime(os.path.join(sf_dir, "events.parquet")),
-            )
-            return src_mtime >= os.path.getmtime(marker)
-        except OSError:
-            return True
-
-    if _stale():
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
         dec = run_streaming_rate_gate(
             spark, sf_dir, base, quota=_RATE_QUOTA, n_chunks=4
         )
-        dec.write.mode("overwrite").parquet(f"{base}/decisions_out")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        dec.write.parquet(f"{base}/decisions_out")
+
+    base = materialize(
+        spark, "streaming_rate_limit_gate", table_files(sf_dir, "events"), build
+    )
     return spark.read.parquet(f"{base}/decisions_out")
 
 
@@ -963,19 +841,10 @@ _HOP_WIN_US = 3 * _HOP_US  # 3-day windows
         "runtime's emission set bit-for-bit",
 )
 def streaming_hopping_window_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_SCRATCH, tag + "_hop")
-    src, out, ckpt = (
-        os.path.join(base, "src"),
-        os.path.join(base, "out"),
-        os.path.join(base, "ckpt"),
+    base = _events_source(
+        spark, sf_dir, "streaming_hopping_window_parity", _plain_source
     )
-    if _needs_rebuild(src, sf_dir):
-        _reset_scratch(base)
-        ev = t(spark, sf_dir, "events").filter(F.col("event_id") < _N)
-        ev.select(
-            F.to_json(F.struct(*ev.columns), JSON_OPTIONS).alias("value")
-        ).coalesce(1).write.mode("overwrite").text(src)
+    src, out, ckpt = _paths(base, "src", "out", "ckpt")
     agg = windowed_counts(
         read_json_stream(spark, src),
         watermark_delay="10 minutes",

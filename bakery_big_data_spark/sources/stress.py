@@ -25,12 +25,14 @@ at 10× the bench scale factor in one `bench.py` sweep:
 
 Generation runs in DuckDB (one SQL per table, no Spark session needed);
 output parquet carries the same TIMESTAMP micros shape the loaders
-already normalize.  The corpus lands outside git (``.stress/``).
+already normalize.  The output directory is always given by the caller
+(``.stress/`` at the repo root is git-ignored).
 
 Usage::
 
-    python -m bakery_big_data_spark.sources.stress [K]
-    SPARK_GRAFT_SF_DIR=/root/repo/.stress/sf1eq python bench.py
+    python -m bakery_big_data_spark.sources.stress OUT_DIR [K]
+    python -m bakery_big_data_spark.sources.stress .stress/sf1eq 10
+    SPARK_GRAFT_SF_DIR=.stress/sf1eq python bench.py
 """
 
 from __future__ import annotations
@@ -141,8 +143,8 @@ def _replica_sql(table: str, src: str, k: int) -> str:
 
 
 def make_stress_corpus(
+    out_dir: str,
     src_dir: str = "/root/testdata/sf0.1",
-    out_dir: str = "/root/repo/.stress/sf1eq",
     replicas: int = 10,
     tables: list[str] | None = None,
 ) -> str:
@@ -167,6 +169,8 @@ def make_stress_corpus(
 
 
 if __name__ == "__main__":
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.stress/sf1eq"
-    make_stress_corpus(out_dir=out, replicas=k)
+    if len(sys.argv) not in (2, 3):
+        sys.exit("usage: python -m bakery_big_data_spark.sources.stress OUT_DIR [K]")
+    make_stress_corpus(
+        sys.argv[1], replicas=int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    )

@@ -22,16 +22,9 @@ from bakery_big_data_spark.sources.sinks import (
 )
 from bakery_big_data_spark.sources.tables import load_table
 
-SCRATCH = "/root/repo/.scratch/test_io"
-
-
 @pytest.fixture()
-def scratch(tmp_path_factory):
-    # keep all side effects inside the repo tree
-    os.makedirs(SCRATCH, exist_ok=True)
-    import tempfile
-
-    return tempfile.mkdtemp(dir=SCRATCH)
+def scratch(tmp_path):
+    return str(tmp_path)
 
 
 def test_partitioned_write_prunes_scan(spark, sf_dir, scratch):

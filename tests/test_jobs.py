@@ -3,16 +3,12 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 from bakery_big_data_spark.jobs import main
 
-SCRATCH = "/root/repo/.scratch/test_jobs"
 
-
-def test_medallion_job_cli(spark, sf_dir):
-    os.makedirs(SCRATCH, exist_ok=True)
-    out = tempfile.mkdtemp(dir=SCRATCH)
+def test_medallion_job_cli(spark, sf_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("jobs"))
     counts = main(["medallion", "--sf-dir", sf_dir, "--out", out])
     assert counts["bronze"] > counts["silver"] > 0
     assert counts["fact_daily"] == counts["ml_features"] > 0

@@ -4,9 +4,6 @@ bakery_streaming_manager.py:27-34 hourly restart loop)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,8 +14,6 @@ from bakery_big_data_spark.streaming.ingest import (
     read_json_stream,
     start_append_sink,
 )
-
-SCRATCH = "/root/repo/.scratch/test_orchestration"
 
 
 def test_retries_then_succeeds():
@@ -54,9 +49,8 @@ def test_retries_exhausted_reraises():
         run_with_retries(always_fails, max_retries=2, sleep=lambda _: None)
 
 
-def test_supervisor_restarts_dead_query(spark, sf_dir):
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+def test_supervisor_restarts_dead_query(spark, sf_dir, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("orch"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 200)
     ev.select(

@@ -4,19 +4,15 @@ re-running is idempotent, gates and joins behave."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from bakery_big_data_spark.pipeline.medallion import run_medallion
 
-SCRATCH = "/root/repo/.scratch/test_pipeline"
 
-
-def test_medallion_end_to_end(spark, sf_dir):
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+def test_medallion_end_to_end(spark, sf_dir, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("pipeline"))
     layers = run_medallion(spark, sf_dir, base)
 
     n_bronze = layers["bronze"].count()
@@ -155,7 +151,7 @@ def test_curation_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert again["training_corpus"].count() == n_train
 
 
-def test_incremental_medallion_replay_is_idempotent(spark, sf_dir):
+def test_incremental_medallion_replay_is_idempotent(spark, sf_dir, tmp_path_factory):
     """Re-running the incremental runner over an already-processed corpus
     (the crash-recovery shape: every chunk replays) must change NOTHING —
     partition overwrites rewrite identical data, and the applied-chunk
@@ -166,8 +162,7 @@ def test_incremental_medallion_replay_is_idempotent(spark, sf_dir):
     )
     from bakery_big_data_spark.sources.snapshots import _load_manifest
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("pipeline"))
     run_medallion_incremental(spark, sf_dir, base, n_chunks=3)
 
     def snapshot_counts():
@@ -189,7 +184,7 @@ def test_incremental_medallion_replay_is_idempotent(spark, sf_dir):
     assert before == after
 
 
-def test_incremental_medallion_chunking_invariance(spark, sf_dir):
+def test_incremental_medallion_chunking_invariance(spark, sf_dir, tmp_path_factory):
     """The maintained state must not depend on HOW history was chunked:
     2-chunk and 4-chunk replays of the same corpus must agree on every
     derived table, and the SCD2 dimension must keep exactly one open
@@ -198,10 +193,9 @@ def test_incremental_medallion_chunking_invariance(spark, sf_dir):
         run_medallion_incremental,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
     outs = {}
     for n_chunks in (2, 4):
-        base = tempfile.mkdtemp(dir=SCRATCH)
+        base = str(tmp_path_factory.mktemp("pipeline"))
         outs[n_chunks] = run_medallion_incremental(
             spark, sf_dir, base, n_chunks=n_chunks
         )
@@ -236,7 +230,7 @@ def test_incremental_medallion_chunking_invariance(spark, sf_dir):
 
 
 @pytest.mark.parametrize("plan", ["shuffled", "interleaved"])
-def test_medallion_incremental_out_of_order(spark, sf_dir, plan):
+def test_medallion_incremental_out_of_order(spark, sf_dir, plan, tmp_path_factory):
     """Out-of-order arrivals (shuffled contiguous day ranges; interleaved
     every-Nth-day chunks with maximally overlapping date ranges) must
     produce the same facts, dims, and SCD2 OPEN snapshot as the ordered
@@ -247,10 +241,9 @@ def test_medallion_incremental_out_of_order(spark, sf_dir, plan):
         run_medallion_incremental,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
     outs = {}
     for p in ("ordered", plan):
-        base = tempfile.mkdtemp(dir=SCRATCH)
+        base = str(tmp_path_factory.mktemp("pipeline"))
         outs[p] = run_medallion_incremental(
             spark, sf_dir, base, n_chunks=3, arrival_plan=p
         )
@@ -283,7 +276,7 @@ def test_medallion_incremental_out_of_order(spark, sf_dir, plan):
 
 
 @pytest.mark.parametrize("plan", ["shuffled", "interleaved"])
-def test_curation_incremental_out_of_order(spark, sf_dir, plan):
+def test_curation_incremental_out_of_order(spark, sf_dir, plan, tmp_path_factory):
     """The curation manifest must be IDENTICAL (full-row equality, not
     just an invariant subset) under out-of-order arrival — the maintained
     state is arrival-order-independent by construction."""
@@ -291,10 +284,9 @@ def test_curation_incremental_out_of_order(spark, sf_dir, plan):
         run_curation_incremental,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
 
     def rows(plan_name):
-        base = tempfile.mkdtemp(dir=SCRATCH)
+        base = str(tmp_path_factory.mktemp("pipeline"))
         m = run_curation_incremental(
             spark, sf_dir, base, n_chunks=3, arrival_plan=plan_name
         )
@@ -303,7 +295,7 @@ def test_curation_incremental_out_of_order(spark, sf_dir, plan):
     assert rows("ordered") == rows(plan)
 
 
-def test_incremental_curation_replay_is_idempotent(spark, sf_dir):
+def test_incremental_curation_replay_is_idempotent(spark, sf_dir, tmp_path_factory):
     """Replaying the incremental curation runner over already-processed
     chunks must not double-merge any state (contamination counters and
     pair sets are the dangerous ones) or stamp new snapshot versions."""
@@ -312,8 +304,7 @@ def test_incremental_curation_replay_is_idempotent(spark, sf_dir):
     )
     from bakery_big_data_spark.sources.snapshots import _load_manifest
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("pipeline"))
 
     def fingerprint(m):
         rows = {
@@ -336,7 +327,7 @@ def test_incremental_curation_replay_is_idempotent(spark, sf_dir):
     ["doc_state", "bench_grams", "band_state", "pairs_state"],
 )
 def test_incremental_curation_survives_mid_chunk_crash(
-    spark, sf_dir, crash_table
+    spark, sf_dir, crash_table, tmp_path_factory
 ):
     """Crash at EACH of the four state commits of a chunk (commit order:
     doc_state -> bench_grams -> band_state -> pairs_state), then replay:
@@ -352,8 +343,7 @@ def test_incremental_curation_survives_mid_chunk_crash(
     )
     from bakery_big_data_spark.sources import snapshots as snapmod
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("pipeline"))
 
     real_write = snapmod.write_snapshot
     state = {"armed": True}
@@ -383,7 +373,9 @@ def test_incremental_curation_survives_mid_chunk_crash(
     assert key(got) == key(want)
 
 
-def test_stream_fed_medallion_checkpoint_rerun_is_idempotent(spark, sf_dir):
+def test_stream_fed_medallion_checkpoint_rerun_is_idempotent(
+    spark, sf_dir, tmp_path_factory
+):
     """Re-invoking the stream-fed runner over an existing checkpoint must
     replay NOTHING (availableNow finds no new files) and change no
     maintained table — the restart contract of the foreachBatch bridge."""
@@ -391,8 +383,7 @@ def test_stream_fed_medallion_checkpoint_rerun_is_idempotent(spark, sf_dir):
         run_medallion_stream_fed,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("pipeline"))
 
     def fingerprint(outs):
         fact = {
@@ -412,7 +403,7 @@ def test_stream_fed_medallion_checkpoint_rerun_is_idempotent(spark, sf_dir):
     assert first == second
 
 
-def test_streaming_dedup_gate_survives_mid_batch_crash(spark, sf_dir):
+def test_streaming_dedup_gate_survives_mid_batch_crash(spark, sf_dir, tmp_path_factory):
     """Crash between the band-state commit and the decisions commit of a
     micro-batch, then restart the stream: checkpoint re-delivery must
     replay the batch exactly-once (duplicate band/shingle rows from the
@@ -423,9 +414,8 @@ def test_streaming_dedup_gate_survives_mid_batch_crash(spark, sf_dir):
         run_streaming_dedup_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    clean_base = tempfile.mkdtemp(dir=SCRATCH)
-    crash_base = tempfile.mkdtemp(dir=SCRATCH)
+    clean_base = str(tmp_path_factory.mktemp("pipeline"))
+    crash_base = str(tmp_path_factory.mktemp("pipeline"))
 
     want = {
         tuple(r)
@@ -522,7 +512,7 @@ def test_streaming_dedup_gate_chain_topology_matches_batch(spark, tmp_path):
     assert (2, 1) in got
 
 
-def test_streaming_dedup_gate_out_of_order(spark, sf_dir):
+def test_streaming_dedup_gate_out_of_order(spark, sf_dir, tmp_path_factory):
     """Shuffled chunk delivery (larger doc-id ranges arriving FIRST) must
     converge to the same decision table as ordered delivery: the gate
     catches each banded pair when its later-arriving partner probes the
@@ -532,11 +522,10 @@ def test_streaming_dedup_gate_out_of_order(spark, sf_dir):
         run_streaming_dedup_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
     ordered = {
         tuple(r)
         for r in run_streaming_dedup_gate(
-            spark, sf_dir, tempfile.mkdtemp(dir=SCRATCH), n_chunks=3
+            spark, sf_dir, str(tmp_path_factory.mktemp("pipeline")), n_chunks=3
         ).collect()
     }
     shuffled = {
@@ -544,7 +533,7 @@ def test_streaming_dedup_gate_out_of_order(spark, sf_dir):
         for r in run_streaming_dedup_gate(
             spark,
             sf_dir,
-            tempfile.mkdtemp(dir=SCRATCH),
+            str(tmp_path_factory.mktemp("pipeline")),
             n_chunks=3,
             arrival_rank=[2, 0, 1],
         ).collect()
@@ -553,7 +542,7 @@ def test_streaming_dedup_gate_out_of_order(spark, sf_dir):
     assert any(not kept for (_, _, kept) in ordered)  # pairs exist
 
 
-def test_streaming_semantic_gate_out_of_order(spark, sf_dir):
+def test_streaming_semantic_gate_out_of_order(spark, sf_dir, tmp_path_factory):
     """The embedding-space gate must also converge to the ordered-arrival
     decision table under shuffled chunk delivery (same both-directions
     candidates + late canonical demotion as the MinHash gate)."""
@@ -561,11 +550,10 @@ def test_streaming_semantic_gate_out_of_order(spark, sf_dir):
         run_streaming_semantic_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
     ordered = {
         tuple(r)
         for r in run_streaming_semantic_gate(
-            spark, sf_dir, tempfile.mkdtemp(dir=SCRATCH), n_chunks=3
+            spark, sf_dir, str(tmp_path_factory.mktemp("pipeline")), n_chunks=3
         ).collect()
     }
     shuffled = {
@@ -573,7 +561,7 @@ def test_streaming_semantic_gate_out_of_order(spark, sf_dir):
         for r in run_streaming_semantic_gate(
             spark,
             sf_dir,
-            tempfile.mkdtemp(dir=SCRATCH),
+            str(tmp_path_factory.mktemp("pipeline")),
             n_chunks=3,
             arrival_rank=[1, 2, 0],
         ).collect()
@@ -582,7 +570,7 @@ def test_streaming_semantic_gate_out_of_order(spark, sf_dir):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_streaming_dedup_gate_arrival_fuzz(spark, sf_dir, seed):
+def test_streaming_dedup_gate_arrival_fuzz(spark, sf_dir, seed, tmp_path_factory):
     """Adversarial arrival fuzz: randomized chunk count AND randomized
     delivery permutation per seed — the gate's decision table must stay
     identical to the 1-chunk (all-at-once) delivery, which is itself the
@@ -594,7 +582,6 @@ def test_streaming_dedup_gate_arrival_fuzz(spark, sf_dir, seed):
         run_streaming_dedup_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
     rng = random.Random(1000 + seed)
     n_chunks = rng.choice([2, 4, 5])
     rank = list(range(n_chunks))
@@ -603,7 +590,7 @@ def test_streaming_dedup_gate_arrival_fuzz(spark, sf_dir, seed):
     baseline = {
         tuple(r)
         for r in run_streaming_dedup_gate(
-            spark, sf_dir, tempfile.mkdtemp(dir=SCRATCH), n_chunks=1
+            spark, sf_dir, str(tmp_path_factory.mktemp("pipeline")), n_chunks=1
         ).collect()
     }
     fuzzed = {
@@ -611,7 +598,7 @@ def test_streaming_dedup_gate_arrival_fuzz(spark, sf_dir, seed):
         for r in run_streaming_dedup_gate(
             spark,
             sf_dir,
-            tempfile.mkdtemp(dir=SCRATCH),
+            str(tmp_path_factory.mktemp("pipeline")),
             n_chunks=n_chunks,
             arrival_rank=rank,
         ).collect()
@@ -708,7 +695,9 @@ def test_incremental_medallion_survives_crash_inside_a_wave(
     assert got == want
 
 
-def test_stream_fed_medallion_survives_mid_arrival_crash(spark, sf_dir):
+def test_stream_fed_medallion_survives_mid_arrival_crash(
+    spark, sf_dir, tmp_path_factory
+):
     """Crash between the state commit and the SCD2 commit of a streaming
     arrival, then restart: checkpoint re-delivery must replay the arrival
     exactly-once (state guard skips the already-merged delta; the SCD2
@@ -718,9 +707,8 @@ def test_stream_fed_medallion_survives_mid_arrival_crash(spark, sf_dir):
     )
     from bakery_big_data_spark.sources import snapshots as snapmod
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    clean_base = tempfile.mkdtemp(dir=SCRATCH)
-    crash_base = tempfile.mkdtemp(dir=SCRATCH)
+    clean_base = str(tmp_path_factory.mktemp("pipeline"))
+    crash_base = str(tmp_path_factory.mktemp("pipeline"))
 
     def fingerprint(outs):
         return (
@@ -758,7 +746,7 @@ def test_stream_fed_medallion_survives_mid_arrival_crash(spark, sf_dir):
     assert got == want
 
 
-def test_streaming_rate_gate_out_of_order(spark, sf_dir):
+def test_streaming_rate_gate_out_of_order(spark, sf_dir, tmp_path_factory):
     """Shuffled chunk delivery must converge to the same admission ledger
     as ordered delivery: the admitted set per (user, day) is monotone
     toward the (ts, event_id)-minimal quota, and late demotion revises
@@ -769,11 +757,10 @@ def test_streaming_rate_gate_out_of_order(spark, sf_dir):
         run_streaming_rate_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
     ordered = {
         tuple(r)
         for r in run_streaming_rate_gate(
-            spark, sf_dir, tempfile.mkdtemp(dir=SCRATCH), quota=2, n_chunks=3
+            spark, sf_dir, str(tmp_path_factory.mktemp("pipeline")), quota=2, n_chunks=3
         ).collect()
     }
     shuffled = {
@@ -781,7 +768,7 @@ def test_streaming_rate_gate_out_of_order(spark, sf_dir):
         for r in run_streaming_rate_gate(
             spark,
             sf_dir,
-            tempfile.mkdtemp(dir=SCRATCH),
+            str(tmp_path_factory.mktemp("pipeline")),
             quota=2,
             n_chunks=3,
             arrival_rank=[2, 0, 1],
@@ -792,7 +779,7 @@ def test_streaming_rate_gate_out_of_order(spark, sf_dir):
     assert 0 < admitted < len(ordered)  # the quota actually bites
 
 
-def test_streaming_semantic_gate_threshold_boundary_pair(spark):
+def test_streaming_semantic_gate_threshold_boundary_pair(spark, tmp_path_factory):
     """r11 ADVICE: the numpy candidate pre-filter drops pairs below
     ``threshold - margin`` before the order-exact phase-2 re-score; a pair
     whose EXACT cosine sits exactly AT the threshold must survive the
@@ -808,8 +795,7 @@ def test_streaming_semantic_gate_threshold_boundary_pair(spark):
         run_streaming_semantic_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    corpus_dir = tempfile.mkdtemp(dir=SCRATCH)
+    corpus_dir = str(tmp_path_factory.mktemp("pipeline"))
     dim = 64
     v1 = [0.0] * dim
     v1[0], v1[1] = 3.0, 4.0
@@ -834,7 +820,7 @@ def test_streaming_semantic_gate_threshold_boundary_pair(spark):
         for r in run_streaming_semantic_gate(
             spark,
             corpus_dir,
-            tempfile.mkdtemp(dir=SCRATCH),
+            str(tmp_path_factory.mktemp("pipeline")),
             n_chunks=2,
             threshold=0.96,
         ).collect()
@@ -847,7 +833,9 @@ def test_streaming_semantic_gate_threshold_boundary_pair(spark):
     assert decisions[3] == (3, True)
 
 
-def test_streaming_semantic_gate_compaction_pressure_and_replay(spark):
+def test_streaming_semantic_gate_compaction_pressure_and_replay(
+    spark, tmp_path_factory
+):
     """r12 verdict task 6 + r12 ADVICE (medium): a replay long enough to
     cross ``compact_log``'s ``max_segments`` MID-STREAM (>16 micro-batches)
     must
@@ -871,8 +859,7 @@ def test_streaming_semantic_gate_compaction_pressure_and_replay(spark):
         run_streaming_semantic_gate,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    corpus_dir = tempfile.mkdtemp(dir=SCRATCH)
+    corpus_dir = str(tmp_path_factory.mktemp("pipeline"))
     dim = 64
     n_chunks = 18
 
@@ -904,13 +891,13 @@ def test_streaming_semantic_gate_compaction_pressure_and_replay(spark):
     want = {
         tuple(r)
         for r in run_streaming_semantic_gate(
-            spark, corpus_dir, tempfile.mkdtemp(dir=SCRATCH), n_chunks=1
+            spark, corpus_dir, str(tmp_path_factory.mktemp("pipeline")), n_chunks=1
         ).collect()
     }
     # the engineered duplicates must actually bite: each i+18 demotes to i
     assert {(19, 1, False), (36, 18, False)} <= want
 
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("pipeline"))
     got = {
         tuple(r)
         for r in run_streaming_semantic_gate(

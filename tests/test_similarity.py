@@ -217,69 +217,47 @@ def test_ivf_served_index_memoized_and_pruned(spark, sf_dir):
     assert got and all(r.q_id < 5 and r.q_id != r.c_id for r in got)
 
 
-def test_ivf_served_index_detects_sibling_corpus_with_older_mtime(spark, sf_dir):
-    """r11 ADVICE: the staleness check must pin the index to the RESOLVED
-    source path + exact mtime, not the sf-dir basename (which is embedded
-    in the scratch path and therefore always equal).  A different corpus
-    at a same-basename sibling path with an OLDER mtime must trigger a
-    rebuild, not silently serve the first corpus's neighbors."""
-    import json
+def test_ivf_served_index_detects_sibling_corpus_with_older_mtime(
+    spark, sf_dir, tmp_path
+):
+    """A different corpus at a same-basename sibling path with an OLDER
+    mtime must get its own index, not silently serve the first corpus's
+    neighbors."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    from bakery_big_data_spark.operators.similarity import (
-        _IVF_INDEX_META,
-        build_ivf_served_index,
-    )
+    from bakery_big_data_spark.operators.similarity import build_ivf_served_index
     from bakery_big_data_spark.plans.base import t
 
-    scratch = tempfile.mkdtemp(dir="/root/repo/.scratch")
-    try:
-        # two same-basename sibling corpora, B's files strictly OLDER
-        dir_a = os.path.join(scratch, "a", "sfSIB")
-        dir_b = os.path.join(scratch, "b", "sfSIB")
-        os.makedirs(dir_a)
-        os.makedirs(dir_b)
-        emb = t(spark, sf_dir, "embeddings").limit(64)
-        emb.filter(F.col("vec_id") % 2 == 0).toPandas().to_parquet(
-            os.path.join(dir_a, "embeddings.parquet")
-        )
-        emb.filter(F.col("vec_id") % 2 == 1).toPandas().to_parquet(
-            os.path.join(dir_b, "embeddings.parquet")
-        )
-        old = os.path.getmtime(os.path.join(dir_a, "embeddings.parquet")) - 3600
-        os.utime(os.path.join(dir_b, "embeddings.parquet"), (old, old))
+    # two same-basename sibling corpora, B's files strictly OLDER
+    dir_a = os.path.join(tmp_path, "a", "sfSIB")
+    dir_b = os.path.join(tmp_path, "b", "sfSIB")
+    os.makedirs(dir_a)
+    os.makedirs(dir_b)
+    emb = t(spark, sf_dir, "embeddings").limit(64)
+    emb.filter(F.col("vec_id") % 2 == 0).toPandas().to_parquet(
+        os.path.join(dir_a, "embeddings.parquet")
+    )
+    emb.filter(F.col("vec_id") % 2 == 1).toPandas().to_parquet(
+        os.path.join(dir_b, "embeddings.parquet")
+    )
+    old = os.path.getmtime(os.path.join(dir_a, "embeddings.parquet")) - 3600
+    os.utime(os.path.join(dir_b, "embeddings.parquet"), (old, old))
 
-        path_a = build_ivf_served_index(spark, dir_a, n_clusters=2)
-        with open(os.path.join(path_a, _IVF_INDEX_META)) as fh:
-            assert json.load(fh)["src_realpath"] == os.path.realpath(
-                os.path.join(dir_a, "embeddings.parquet")
-            )
-        ids_a = {
-            r.c_id for r in spark.read.parquet(path_a).select("c_id").collect()
-        }
-        assert ids_a and all(i % 2 == 0 for i in ids_a)
+    path_a = build_ivf_served_index(spark, dir_a, n_clusters=2)
+    ids_a = {
+        r.c_id for r in spark.read.parquet(path_a).select("c_id").collect()
+    }
+    assert ids_a and all(i % 2 == 0 for i in ids_a)
 
-        # same basename + params → same scratch dir; older mtime — the
-        # pre-fix check would reuse corpus A's index here
-        path_b = build_ivf_served_index(spark, dir_b, n_clusters=2)
-        assert path_b == path_a
-        ids_b = {
-            r.c_id for r in spark.read.parquet(path_b).select("c_id").collect()
-        }
-        assert ids_b and all(i % 2 == 1 for i in ids_b), (
-            "stale sibling-corpus index served: staleness check ignored "
-            "the resolved source path"
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-        shutil.rmtree(
-            "/root/repo/.scratch/ivf_index/embeddings_sfSIB_k2_s7",
-            ignore_errors=True,
-        )
+    path_b = build_ivf_served_index(spark, dir_b, n_clusters=2)
+    ids_b = {
+        r.c_id for r in spark.read.parquet(path_b).select("c_id").collect()
+    }
+    assert ids_b and all(i % 2 == 1 for i in ids_b), (
+        "stale sibling-corpus index served"
+    )
 
 
 def test_hyperplane_prefix_property_and_scaled_params():

@@ -100,23 +100,34 @@ def test_snapshot_diff_null_fields(spark, tmp_path):
 
 
 def test_half_committed_scratch_table_rebuilds(spark, sf_dir, monkeypatch):
-    """A crash between the two scratch write_snapshot calls leaves a valid
-    manifest with versions=[1]; the staleness check must treat that as
-    uncommitted and rebuild rather than fail on 'version 2 not in [1]'."""
+    """A crash between the two scratch write_snapshot calls leaves no store
+    entry; the next call rebuilds the table from scratch with both
+    versions instead of failing on 'version 2 not in [1]'."""
     import json
 
-    from bakery_big_data_spark.plans.io_paths import _snapshot_table_path
+    import pytest
 
-    path = _snapshot_table_path(spark, sf_dir)
-    manifest = os.path.join(path, "_snapshot_manifest.json")
-    m = json.load(open(manifest))
+    from bakery_big_data_spark.plans.io_paths import _snapshot_table_path
+    from bakery_big_data_spark.sources import snapshots
+
+    real = snapshots.write_snapshot
+    calls = []
+
+    def crash_on_second(df, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("crash between the two commits")
+        return real(df, path, *args, **kwargs)
+
+    # a fresh session: the shared one may already hold this table
+    fresh = spark.newSession()
+    monkeypatch.setattr(snapshots, "write_snapshot", crash_on_second)
+    with pytest.raises(RuntimeError, match="crash between"):
+        _snapshot_table_path(fresh, sf_dir)
+    monkeypatch.setattr(snapshots, "write_snapshot", real)
+    path = _snapshot_table_path(fresh, sf_dir)
+    m = json.load(open(os.path.join(path, "_snapshot_manifest.json")))
     assert m["versions"] == [1, 2]
-    # simulate the crashed second commit
-    json.dump({"current": 1, "versions": [1]}, open(manifest, "w"))
-    os.utime(manifest, (0, 2_000_000_000))  # keep marker newer than source
-    path2 = _snapshot_table_path(spark, sf_dir)
-    m2 = json.load(open(os.path.join(path2, "_snapshot_manifest.json")))
-    assert m2["versions"] == [1, 2]
 
 
 def test_expire_snapshots_retains_current(spark, sf_dir, tmp_path):

@@ -4,7 +4,6 @@ micro-batches AND across restarts (state store + checkpoint)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -16,8 +15,6 @@ from bakery_big_data_spark.streaming.ingest import (
 )
 from bakery_big_data_spark.streaming.stateful import running_user_totals
 
-SCRATCH = "/root/repo/.scratch/test_stateful"
-
 
 def _write_json(spark, sf_dir, path, lo, hi):
     ev = load_table(spark, sf_dir, "events").filter(
@@ -28,9 +25,8 @@ def _write_json(spark, sf_dir, path, lo, hi):
     ).coalesce(1).write.mode("append").text(path)
 
 
-def test_state_accumulates_across_restarts(spark, sf_dir):
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+def test_state_accumulates_across_restarts(spark, sf_dir, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("stateful"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
 
     def run_once():
@@ -77,7 +73,7 @@ import pytest
 
 @pytest.mark.parametrize("max_files", [1, None])
 def test_idle_session_flush_matches_batch_sessionization(
-    spark, sf_dir, max_files
+    spark, sf_dir, max_files, tmp_path_factory
 ):
     """The event-time-timeout sessionizer must flush exactly the sessions
     a batch lag/gap sessionization derives, once a sentinel event advances
@@ -90,8 +86,7 @@ def test_idle_session_flush_matches_batch_sessionization(
     INVALID_TIMEOUT_TIMESTAMP."""
     from bakery_big_data_spark.streaming.stateful import idle_session_flush
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("stateful"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
 
     ev = (
@@ -234,7 +229,7 @@ def test_tws_plan_construction_is_dependency_free(spark, sf_dir):
     )
 
 
-def test_tws_profile_matches_batch_aggregate(spark, sf_dir):
+def test_tws_profile_matches_batch_aggregate(spark, sf_dir, tmp_path_factory):
     """End-to-end drain of the transformWithStateInPandas profile across
     4 micro-batches == the batch aggregate (int64-cents totals are
     order-independent, so micro-batching cannot change them).  Auto-skips
@@ -252,8 +247,7 @@ def test_tws_profile_matches_batch_aggregate(spark, sf_dir):
         running_user_profile_tws,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("stateful"))
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     for i in range(4):
         _write_json(spark, sf_dir, src, i * 100, (i + 1) * 100)

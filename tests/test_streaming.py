@@ -5,7 +5,6 @@ supervision."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -18,12 +17,9 @@ from bakery_big_data_spark.streaming.ingest import (
     windowed_counts,
 )
 
-SCRATCH = "/root/repo/.scratch/test_streaming"
 
-
-def _dirs():
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+def _dirs(tmp_path_factory):
+    base = tmp_path_factory.mktemp("streaming")
     return (
         f"{base}/src",
         f"{base}/out",
@@ -40,8 +36,8 @@ def _write_json_batch(spark, sf_dir, path, lo, hi, mode="append"):
     ).coalesce(1).write.mode(mode).text(path)
 
 
-def test_ingest_and_checkpoint_resume(spark, sf_dir):
-    src, out, ckpt = _dirs()
+def test_ingest_and_checkpoint_resume(spark, sf_dir, tmp_path_factory):
+    src, out, ckpt = _dirs(tmp_path_factory)
     _write_json_batch(spark, sf_dir, src, 0, 200)
 
     def run():
@@ -73,8 +69,8 @@ def test_ingest_and_checkpoint_resume(spark, sf_dir):
     assert got.agg(F.sum(F.col("value").cast("decimal(30,6)"))).first()[0] == orig
 
 
-def test_watermarked_window_agg_matches_batch(spark, sf_dir):
-    src, out, ckpt = _dirs()
+def test_watermarked_window_agg_matches_batch(spark, sf_dir, tmp_path_factory):
+    src, out, ckpt = _dirs(tmp_path_factory)
     _write_json_batch(spark, sf_dir, src, 0, 2000)
 
     stream = read_json_stream(spark, src)
@@ -111,10 +107,10 @@ def test_watermarked_window_agg_matches_batch(spark, sf_dir):
     assert g, "at least one window must have closed"
 
 
-def test_stream_dedup_drops_duplicates(spark, sf_dir):
+def test_stream_dedup_drops_duplicates(spark, sf_dir, tmp_path_factory):
     from bakery_big_data_spark.streaming.ingest import dedup_stream
 
-    src, out, ckpt = _dirs()
+    src, out, ckpt = _dirs(tmp_path_factory)
     # the same 300 events delivered twice (at-least-once duplication)
     _write_json_batch(spark, sf_dir, src, 0, 300)
     _write_json_batch(spark, sf_dir, src, 0, 300)
@@ -133,10 +129,10 @@ def test_stream_dedup_drops_duplicates(spark, sf_dir):
     assert got.select(F.countDistinct("event_id")).first()[0] == 300
 
 
-def test_stream_static_enrichment(spark, sf_dir):
+def test_stream_static_enrichment(spark, sf_dir, tmp_path_factory):
     from bakery_big_data_spark.streaming.ingest import enrich_with_dim
 
-    src, out, ckpt = _dirs()
+    src, out, ckpt = _dirs(tmp_path_factory)
     _write_json_batch(spark, sf_dir, src, 0, 500)
     dim = (
         load_table(spark, sf_dir, "events")
@@ -158,9 +154,9 @@ def test_stream_static_enrichment(spark, sf_dir):
     assert got.filter(F.col("type_len").isNull()).count() == 0
 
 
-def test_supervise_multi_query(spark, sf_dir):
-    src1, out1, ck1 = _dirs()
-    src2, out2, ck2 = _dirs()
+def test_supervise_multi_query(spark, sf_dir, tmp_path_factory):
+    src1, out1, ck1 = _dirs(tmp_path_factory)
+    src2, out2, ck2 = _dirs(tmp_path_factory)
     _write_json_batch(spark, sf_dir, src1, 0, 100)
     _write_json_batch(spark, sf_dir, src2, 100, 250)
     q1 = start_append_sink(
@@ -174,7 +170,7 @@ def test_supervise_multi_query(spark, sf_dir):
     assert spark.read.parquet(out2).count() == 150
 
 
-def test_dlq_routes_malformed_lines(spark, sf_dir):
+def test_dlq_routes_malformed_lines(spark, sf_dir, tmp_path):
     """Dead-letter routing: well-formed lines land in the table, garbage
     lines land raw in the DLQ, and a checkpoint resume re-ingests neither."""
     from bakery_big_data_spark.streaming.ingest import (
@@ -182,7 +178,7 @@ def test_dlq_routes_malformed_lines(spark, sf_dir):
         start_dlq_sink,
     )
 
-    base = tempfile.mkdtemp(prefix="dlq_")
+    base = str(tmp_path)
     src, out, dlq, ckpt = (os.path.join(base, d) for d in ("src", "out", "dlq", "ck"))
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 50)
     good = ev.select(F.to_json(F.struct(*ev.columns), JSON_OPTIONS).alias("value"))
@@ -205,14 +201,14 @@ def test_dlq_routes_malformed_lines(spark, sf_dir):
     assert spark.read.parquet(dlq).count() == 3
 
 
-def test_streaming_merge_sink_upserts(spark, sf_dir):
+def test_streaming_merge_sink_upserts(spark, sf_dir, tmp_path):
     """Streaming MERGE sink: a second drop of the same keys with newer
     recency updates in place (no duplicates), older recency is ignored,
     and new keys insert — per micro-batch, through the batch merge
     operator."""
     from bakery_big_data_spark.streaming.ingest import start_merge_sink
 
-    base = tempfile.mkdtemp(prefix="msink_")
+    base = str(tmp_path)
     src, tbl, ckpt = (os.path.join(base, d) for d in ("src", "tbl", "ck"))
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 100)
 
@@ -299,13 +295,13 @@ def test_streaming_dedup_replay_idempotent(spark, sf_dir):
     assert q.build(spark, sf_dir).count() == n1  # checkpoint resume: no growth
 
 
-def test_snapshot_rollup_sink_incremental_and_exactly_once(spark, sf_dir):
+def test_snapshot_rollup_sink_incremental_and_exactly_once(
+    spark, sf_dir, tmp_path_factory
+):
     """The versioned-gold streaming sink: one snapshot version per
     micro-batch, final state equals the batch rollup, historical versions
     readable, and a manually replayed batch is detected via the
     applied-batch-id committed inside the manifest (no double count)."""
-    import tempfile
-
     from bakery_big_data_spark.sources.snapshots import (
         last_commit_meta,
         read_snapshot,
@@ -314,8 +310,7 @@ def test_snapshot_rollup_sink_incremental_and_exactly_once(spark, sf_dir):
         start_snapshot_rollup_sink,
     )
 
-    os.makedirs(SCRATCH, exist_ok=True)
-    base = tempfile.mkdtemp(dir=SCRATCH)
+    base = str(tmp_path_factory.mktemp("streaming"))
     src, table, ckpt = f"{base}/src", f"{base}/table", f"{base}/ckpt"
     _write_json_batch(spark, sf_dir, src, 0, 400)
     _write_json_batch(spark, sf_dir, src, 400, 800)
