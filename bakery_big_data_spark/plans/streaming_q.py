@@ -349,10 +349,8 @@ def streaming_custom_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         out, ckpt = _paths(base, "out", "ckpt")
 
         def _landed() -> int:
-            try:
-                return spark.read.parquet(out).count()
-            except Exception:
-                return 0
+            """Rows in the stopped query's sink; 0 if no batch landed."""
+            return spark.read.parquet(out).count() if os.path.isdir(out) else 0
 
         q = (
             spark.readStream.format("synthetic_events")
@@ -373,8 +371,14 @@ def streaming_custom_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .queryName("gen_drain")
             .start()
         )
+        # poll the query's progress, not the sink: the sink does not exist
+        # before the first batch lands, and a batch's progress is reported
+        # only after foreachBatch has written it
         deadline = time.time() + 120
-        while _landed() < _GEN_N and time.time() < deadline:
+        while (
+            sum(p.numInputRows for p in q.recentProgress) < _GEN_N
+            and time.time() < deadline
+        ):
             time.sleep(0.5)
         q.stop()
         q.awaitTermination()

@@ -30,6 +30,28 @@ The conf is static: Spark reads it once per JVM, when the codegen cache is
 first used, so ``get_spark`` sets it on the builder and ``tune`` cannot.  A
 session someone else built, such as the test driver's, keeps Spark's
 default.
+
+Plans build without call-site capture.  With
+``spark.python.sql.dataFrameDebugging.enabled`` on (Spark's default), every
+``functions.*`` and ``Column`` call looks up the active session, reads
+``spark.sql.stackTracesInDataFrameContext``, captures the Python call stack
+and sets, then clears, ``PySparkCurrentOrigin`` in the JVM: several py4j
+round trips per expression.  Turning it off cut a warm build of the 22
+``serving_mix`` queries from about 12.5k py4j round trips to about 5k
+(sf0.01, 4 cores).  ``get_spark`` turns it off (``DATAFRAME_DEBUGGING``).
+
+The trade: an error raised by a DataFrame expression, such as an ANSI
+divide-by-zero, no longer names the Python line that built the
+expression.  PySpark reads the setting once per process, from the session
+active at the first wrapped call, and caches it, so setting it on a
+running session does nothing.  To get call sites back while debugging,
+start a fresh process and build the session yourself, not through
+``get_spark``, with the conf set to ``true`` before any DataFrame call;
+the catalog's queries only ``tune`` the session they are handed::
+
+    spark = SparkSession.builder.config(
+        "spark.python.sql.dataFrameDebugging.enabled", "true"
+    ).getOrCreate()
 """
 
 from __future__ import annotations
@@ -56,6 +78,10 @@ RUNTIME_CONF = {
 #: Entries of Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``);
 #: sized above the largest working set measured, see the module docstring.
 CODEGEN_CACHE_ENTRIES = 4096
+
+#: ``spark.python.sql.dataFrameDebugging.enabled``: off, so building a plan
+#: captures no Python call sites (see the module docstring).
+DATAFRAME_DEBUGGING = "false"
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -90,6 +116,7 @@ def get_spark(app_name: str = "bakery-big-data-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", DATAFRAME_DEBUGGING)
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -1,8 +1,11 @@
-"""Session defaults: generated code compiles once per session."""
+"""Session defaults: generated code compiles once per session, and plans
+build without Python call-site capture."""
 
 from __future__ import annotations
 
 import re
+
+from pyspark.errors.utils import is_debugging_enabled
 
 from bakery_big_data_spark.plans import REGISTRY
 from bakery_big_data_spark.session import CODEGEN_CACHE_ENTRIES
@@ -19,6 +22,13 @@ def test_codegen_cache_is_sized(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_dataframe_debugging_is_off(spark):
+    """PySpark caches the setting per process at the first wrapped call, so
+    the session conf and the cached value must both say off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
 
 
 def test_serving_round_reuses_generated_code(spark, sf01_dir):

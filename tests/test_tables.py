@@ -1,6 +1,7 @@
 """The session-scoped parquet catalog behind ``load_table`` and
-``read_snapshot``: hits run no Spark job, every kind of rewrite misses, and
-a hit reads exactly the schema a bare ``spark.read.parquet`` infers."""
+``read_snapshot``: hits run no Spark job, every kind of rewrite misses, a
+hit reads exactly the schema a bare ``spark.read.parquet`` infers, and a
+hit of ``load_table`` returns the miss's rows under fresh attribute ids."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from bakery_big_data_spark.session import tune
 from bakery_big_data_spark.sources import tables
 from bakery_big_data_spark.sources.sinks import overwrite_partitions
 from bakery_big_data_spark.sources.snapshots import read_snapshot, write_snapshot
@@ -178,3 +180,56 @@ def test_concurrent_reads_leave_one_entry_per_path(spark, sf01_dir):
     for (shared_schema, own_schema), path in zip(seen, own):
         assert shared_schema == entries[os.path.abspath(shared)].schema
         assert own_schema == entries[os.path.abspath(path)].schema
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def test_load_table_hit_equals_miss(spark, sf01_dir, tmp_path):
+    """Every test table, plus ``events`` with TIMESTAMP(NANOS) ``ts``, on a
+    session whose catalog starts empty: the first load misses, the second
+    hits, and both have the same schema and rows."""
+    session = tune(spark.newSession())
+    nanos = pq.read_table(f"{sf01_dir}/events.parquet")
+    ts = nanos.schema.get_field_index("ts")
+    nanos = nanos.set_column(ts, "ts", nanos.column(ts).cast(pa.timestamp("ns")))
+    pq.write_table(nanos, tmp_path / "events.parquet")
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type.unit == "ns"
+
+    for sf, name in [(sf01_dir, n) for n in TPCH_TABLES] + [(str(tmp_path), "events")]:
+        miss, miss_jobs = _jobs(session, lambda: load_table(session, sf, name))
+        hit, hit_jobs = _jobs(session, lambda: load_table(session, sf, name))
+        assert len(miss_jobs) == 1 and hit_jobs == [], name
+        assert hit.schema == miss.schema, name
+        assert _rows(hit) == _rows(miss), name
+    assert dict(hit.dtypes)["ts"] == "timestamp"
+    assert _rows(hit) == _rows(load_table(session, sf01_dir, "events"))
+
+
+def test_hits_self_join_like_fresh_reads(spark, sf01_dir):
+    """``nation_market_share`` joins ``nation`` to itself; two hits must
+    carry distinct attribute ids, as two fresh reads do (two reads of one
+    temp view would not, and the join condition would be ambiguous)."""
+    load_table(spark, sf01_dir, "nation")
+    n1, n2 = load_table(spark, sf01_dir, "nation"), load_table(spark, sf01_dir, "nation")
+    f1 = spark.read.parquet(f"{sf01_dir}/nation.parquet")
+    f2 = spark.read.parquet(f"{sf01_dir}/nation.parquet")
+    got = _rows(n1.join(n2, n1["n_regionkey"] == n2["n_nationkey"]))
+    want = _rows(f1.join(f2, f1["n_regionkey"] == f2["n_nationkey"]))
+    assert got == want and len(got) == 25
+
+
+def test_rewrite_after_hit_reads_new_rows(spark, sf01_dir, tmp_path):
+    nation = pq.read_table(f"{sf01_dir}/nation.parquet")
+    path = tmp_path / "nation.parquet"
+    pq.write_table(nation, path)
+    load_table(spark, str(tmp_path), "nation")
+    hit, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs == [] and hit.count() == 25
+    pq.write_table(nation.slice(20), path)
+    df, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert len(jobs) == 1
+    assert sorted(r.n_nationkey for r in df.collect()) == sorted(
+        nation.column("n_nationkey").to_pylist()[20:]
+    )
